@@ -47,16 +47,10 @@ object GraphOps {
   // the family's final frames are eager/checkpointed, so the scan is not
   // visible in their explain output.
   //
-  // Persisted + tracked (r18, VERDICT r17 #3): the aggregate itself is now
-  // the family's shared cache entry. Before this, only Graph.prep's JOINED
-  // frame (edges⋈outweight) was persisted, so q139/q143 shared one events
-  // window pass via plan-dedup but q145 (which persisted a plain itemEdges
-  // copy) and q150 (shortestPaths persists edges.select(src,dst)) each
-  // re-ran the FULL events scan + JSON decode + window pass — three passes
-  // per run for the family. Caching at the aggregate (|item pairs| rows,
-  // independent of event count — the GraphX edge-cache discipline already
-  // documented above) makes every downstream persist materialize from this
-  // cache: ONE events pass per run at any scale.
+  // The aggregate is the family's shared frame ([[itemEdges]]): caching
+  // it (|item pairs| rows, independent of event count — the GraphX
+  // edge-cache discipline) makes q139/q143/q145/q150 and every downstream
+  // per-call persist read ONE events pass per run at any scale.
   /** The raw (uncached) edge-aggregate plan — split out so PlanSuite can
     * pin the native json_int_key decode on the builder itself (a cached
     * frame's formatted explain hides the inner expressions). */
@@ -79,28 +73,22 @@ object GraphOps {
   }
 
   private[graft] def itemEdges(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.engine.CacheReaper.track(
-      itemEdgesPlan(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    graft.engine.CacheReaper.shared(s, dir, "itemEdges")(itemEdgesPlan(s, dir))
 
   /** Per-item purchase counts (k, n) — the seed-derivation aggregate q143
-    * (top-5 seeds) and q150 (top-1 root) both need (r18, VERDICT r17 #3):
-    * each previously re-scanned and re-JSON-decoded the FULL events table
-    * for the same |purchase-items|-row aggregate. Persisted + tracked like
-    * [[itemEdges]]' prep tables, so CacheManager plan-dedup serves the
-    * second query's seed scan from cache (bench order: q143 materializes,
-    * q150 reuses) — one events pass saved per run at any scale. The
-    * aggregate is tiny (distinct purchased items), so the persist itself
-    * is O(items) memory. Downstream orderBy/limit is unchanged, so seeds
-    * and root are bit-identical to the per-query scans they replace. */
-  private[graft] def purchaseCounts(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.engine.CacheReaper.track(
+    * (top-5 seeds) and q150 (top-1 root) both need, so the full events
+    * scan + JSON decode for this |purchase-items|-row aggregate runs once
+    * per run. The aggregate is tiny (distinct purchased items). Downstream
+    * orderBy/limit is per query, so seeds and root are bit-identical to
+    * per-query scans. */
+  private[ops] def purchaseCounts(s: org.apache.spark.sql.SparkSession, dir: String) =
+    graft.engine.CacheReaper.shared(s, dir, "purchaseCounts") {
       Tables.table(s, dir, "events")
         .select(col("event_type"),
           graft.engine.expr.JsonIntKey.of(col("props"), "k").cast("int").as("k"))
         .where(col("k").isNotNull && col("event_type") === "purchase")
         .groupBy("k").agg(count(lit(1)).as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }
 
   // --- q139: PageRank over the item-transition graph -----------------------
   // Nodes = items (props.$.k); a directed edge src→dst with weight w means
@@ -218,23 +206,21 @@ object GraphOps {
   }
 
   /** Per (src, dst) event-type transition counts, self-loops INCLUDED —
-    * the aggregate q144's Markov matrix is built from, persisted + tracked
-    * (r18, VERDICT r17 #3) so q152's edge build (the SAME aggregate with
-    * self-loop transitions dropped — a filter on the grouping keys, which
-    * commutes exactly with the aggregation) reuses it instead of re-running
-    * its own full events window pass. |types|² rows at any corpus size, so
-    * the persist is metadata-sized. */
-  private[graft] def typeTransitions(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    graft.engine.CacheReaper.track(
+    * the aggregate q144's Markov matrix is built from. q152's edge build
+    * (the SAME aggregate with self-loop transitions dropped — a filter on
+    * the grouping keys, which commutes exactly with the aggregation) reuses
+    * it instead of re-running its own full events window pass. |types|²
+    * rows at any corpus size, so the frame is metadata-sized. */
+  private[graft] def typeTransitions(s: org.apache.spark.sql.SparkSession, dir: String) =
+    graft.engine.CacheReaper.shared(s, dir, "typeTransitions") {
+      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       Tables.table(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_type").as("dst"))
         .withColumn("src", lag(col("dst"), 1).over(w))
         .where(col("src").isNotNull)
         .groupBy("src", "dst").agg(count(lit(1)).as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+    }
 
   // --- q144: Markov transition matrix over event types ---------------------
   // The behavioral model q139's edge build specializes: per (src, dst)
@@ -291,8 +277,8 @@ object GraphOps {
       |LEFT JOIN recip ON recip.v = COALESCE(outd.v, ind.v)
       |ORDER BY out_w + in_w DESC, item LIMIT 20""".stripMargin) { (s, dir) =>
     // The edge aggregate feeds five plan references (out/in/recip a+b);
-    // itemEdges is persisted at the source since r18, so the events window
-    // pass runs once — for the whole family, not just this query.
+    // itemEdges is the family's shared frame, so the events window pass
+    // runs once — for the whole family, not just this query.
     val e = itemEdges(s, dir)
     val outd = e.groupBy(col("src").as("v"))
       .agg(count(lit(1)).as("out_deg"), sum("w").as("out_w"))
@@ -394,8 +380,8 @@ object GraphOps {
       |    FROM e JOIN r2 ON r2.v = e.src GROUP BY e.dst) c ON c.v = nodes.v, nn)
       |SELECT v AS event_type, CAST(pr AS BIGINT) AS pr_scaled FROM r3
       |ORDER BY pr_scaled DESC, event_type""".stripMargin) { (s, dir) =>
-    // Edges = q144's persisted transition aggregate with self-loop
-    // transitions dropped (r18): src<>dst filters whole GROUPS (it is a
+    // Edges = q144's shared transition aggregate with self-loop
+    // transitions dropped: src<>dst filters whole GROUPS (it is a
     // predicate on the grouping keys), so filtering the aggregate is
     // bit-identical to filtering the rows before it — and the second full
     // events window pass this query ran is now a cache hit.

@@ -175,7 +175,7 @@ object LlmOps {
       // label joins back onto the symmetric pair stream (a metadata lookup
       // on doc_a) rather than riding through the self-join — see
       // Similarity.srpBandedPairs on why the branches must stay symmetric.
-      // r18: pairs come from the family-shared SRP frame (SimilarityOps.
+      // Pairs come from the family-shared SRP frame (SimilarityOps.
       // srpPairs, built at the family-min 0.10 threshold) filtered to this
       // query's 0.30 — bit-identical, one bucket pipeline per run.
       SimilarityOps.srpPairs(s, dir)
@@ -443,7 +443,7 @@ object LlmOps {
       |SELECT doc_id, rn, term, score FROM ranked WHERE rn <= 3
       |ORDER BY doc_id, rn LIMIT 600""".stripMargin) { (s, dir) =>
     val docs = Tables.table(s, dir, "documents")
-    // r18: tfc is the family-shared TextOps.termFreq frame (q118's tf is
+    // tfc is the family-shared TextOps.termFreq frame (q118's tf is
     // the identical aggregate).
     val tfc = TextOps.termFreq(s, dir)
     val dfc = tfc.groupBy("term").agg(count(lit(1)).as("df"))

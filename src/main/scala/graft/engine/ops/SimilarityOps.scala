@@ -16,49 +16,46 @@ import graft.engine.{QueryDef, Tables}
 object SimilarityOps {
 
   /** SRP-banded candidate pairs over the embeddings table at the FAMILY
-    * MINIMUM threshold (0.10), persisted + tracked (r18, VERDICT r17 #4).
-    * q34 (≥0.30), q49 (≥0.40), q111 and q128 (≥0.10) previously each ran
-    * the identical bucket→window-cap→collect→pair-generator→dedup pipeline
-    * (same 8×6 SRP planes, same bucketCap) differing ONLY in the final
-    * threshold filter; a pair's sim is identical in every table it
-    * collides in, so threshold filtering commutes with the pair dedup
-    * (the srpBandedPairs contract) and each query filters this shared
+    * MINIMUM threshold (0.10). q34 (≥0.30), q49 (≥0.40), q111 and q128
+    * (≥0.10) run the identical bucket→window-cap→collect→pair-generator→
+    * dedup pipeline (same 8×6 SRP planes, same bucketCap) differing ONLY
+    * in the final threshold filter; a pair's sim is identical in every
+    * table it collides in, so threshold filtering commutes with the pair
+    * dedup (the srpBandedPairs contract) and each query filters this shared
     * frame to its own threshold with bit-identical results. One bucket
-    * pipeline per run instead of four; the persisted frame is the deduped
+    * pipeline per run instead of four; the frame is the deduped
     * candidate-pair set — corpus-fraction-sized (pairs near cosine ≥ 0.10),
     * orders smaller than the vectors it derives from. */
   private[ops] def srpPairs(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.engine.CacheReaper.track(
+    graft.engine.CacheReaper.shared(s, dir, "srpPairs") {
       graft.operators.Similarity
         .srpBandedPairs(Tables.table(s, dir, "embeddings"), "vec_id", "embedding",
           threshold = 0.10, dim = 64, tables = 8, bitsPerTable = 6, bucketCap = 256)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }
 
   /** The distinct-trigram shingle frame (doc_id, sh) over documents with
     * ≥3 tokens — the shared front end of q48 (banded-MinHash Jaccard),
-    * q75 (CC over MinHash candidates) and q124 (posting-list Jaccard),
-    * persisted + tracked (r18, VERDICT r17 #4) so the tokenize+hash pass
-    * over the corpus runs once per run instead of three times. */
-  private[graft] def shingled(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.engine.CacheReaper.track(
+    * q75 (CC over MinHash candidates) and q124 (posting-list Jaccard), so
+    * the tokenize+hash pass over the corpus runs once per run. */
+  private[ops] def shingled(s: org.apache.spark.sql.SparkSession, dir: String) =
+    graft.engine.CacheReaper.shared(s, dir, "shingled") {
       Tables.table(s, dir, "documents")
         .withColumn("l", split(col("text"), " "))
         .where(size(col("l")) >= 3)
         .select(col("doc_id"), graft.functions.GraftFunctions.hashedShingles("l").as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }
 
   /** Verified fuzzy name pairs (str_a < str_b, 1 ≤ dist ≤ 3) over the
     * part-name vocabulary — the shared PassJoin candidate+verify pipeline
-    * of q66 (fuzzy join) and q149 (entity resolution), persisted + tracked
-    * (r18, VERDICT r17 #4): one segment-key explode + join + banded-DP
-    * verification per run instead of two. Vocabulary-scale by contract
-    * (distinct names), so the persist is metadata-sized. */
-  private[graft] def fuzzyNamePairs(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.engine.CacheReaper.track(
+    * of q66 (fuzzy join) and q149 (entity resolution): one segment-key
+    * explode + join + banded-DP verification per run instead of two.
+    * Vocabulary-scale by contract (distinct names), so the frame is
+    * metadata-sized. */
+  private[ops] def fuzzyNamePairs(s: org.apache.spark.sql.SparkSession, dir: String) =
+    graft.engine.CacheReaper.shared(s, dir, "fuzzyNamePairs") {
       graft.operators.FuzzyJoin
-        .similarStringPairs(
-          Tables.table(s, dir, "part").select("p_name"), "p_name", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .similarStringPairs(Tables.table(s, dir, "part").select("p_name"), "p_name", 3)
+    }
 
   // --- q47: SimHash near-dup candidates (portable bit-sampling hashes) ----
   // 64-bit SimHash per doc (sign of per-bit ±1 sums over token hashes),
@@ -147,7 +144,7 @@ object SimilarityOps {
       |FROM k a JOIN k b ON a.doc_id < b.doc_id AND (a.k0 = b.k0 OR a.k1 = b.k1)
       |ORDER BY jaccard DESC, doc_a, doc_b LIMIT 20""".stripMargin) { (s, dir) =>
     import graft.functions.GraftFunctions
-    val sh = shingled(s, dir) // shared tokenize+hash pass (r18)
+    val sh = shingled(s, dir) // shared tokenize+hash pass
     val keyed = sh.select(col("doc_id"), col("sh"),
       posexplode(GraftFunctions.minhashBandKeys("sh")).as(Seq("band", "key")))
     val a = keyed.select(col("band"), col("key"),
@@ -199,7 +196,7 @@ object SimilarityOps {
       |FROM i JOIN sz sa ON sa.doc_id = i.doc_a JOIN sz sb ON sb.doc_id = i.doc_b
       |WHERE CAST(CAST(CAST(inter AS DECIMAL(18,6)) / (sa.sz + sb.sz - inter) AS DECIMAL(38,6)) AS DOUBLE) >= 0.5
       |ORDER BY jaccard DESC, doc_a, doc_b LIMIT 200""".stripMargin) { (s, dir) =>
-    val sh = shingled(s, dir) // shared tokenize+hash pass (r18)
+    val sh = shingled(s, dir) // shared tokenize+hash pass
     graft.operators.Dedup
       .jaccardPostings(sh, "doc_id", "sh", minJaccard = 0.5, maxDocFreq = 50)
       .orderBy(col("jaccard").desc, col("doc_a"), col("doc_b")).limit(200)
@@ -235,7 +232,7 @@ object SimilarityOps {
          |FROM n GROUP BY label ORDER BY label""".stripMargin) { (s, dir) =>
       val emb = Tables.table(s, dir, "embeddings")
       // shared SRP pair frame at the family-min threshold, filtered to this
-      // query's 0.40 (bit-identical — see srpPairs; r18)
+      // query's 0.40 (bit-identical — see srpPairs)
       val dups = srpPairs(s, dir)
         .where(col("sim") >= 0.40)
         .select(col("doc_b").as("vec_id")).distinct()
@@ -374,7 +371,7 @@ object SimilarityOps {
       |WHERE levenshtein(a.p_name, b.p_name) <= 3
       |ORDER BY dist, key_a, key_b LIMIT 200""".stripMargin) { (s, dir) =>
     val p = Tables.table(s, dir, "part").select("p_partkey", "p_brand", "p_type", "p_name")
-    val nn = fuzzyNamePairs(s, dir) // shared PassJoin pipeline with q149 (r18)
+    val nn = fuzzyNamePairs(s, dir) // shared PassJoin pipeline with q149
     // expansion needs both orientations: row a carries str_a, row b str_b.
     // Explode, not union-of-self: a union would duplicate the whole
     // candidate pipeline in the plan (PlanSuite counts its joins).
@@ -436,7 +433,7 @@ object SimilarityOps {
       |FROM (SELECT src, CAST(MIN(dst) AS BIGINT) AS component FROM reach GROUP BY src)
       |GROUP BY component ORDER BY n_members DESC, component LIMIT 100""".stripMargin) { (s, dir) =>
     import graft.functions.GraftFunctions
-    val sh = shingled(s, dir) // shared tokenize+hash pass (r18)
+    val sh = shingled(s, dir) // shared tokenize+hash pass
     val keyed = sh.select(col("doc_id"),
       posexplode(GraftFunctions.minhashBandKeys("sh")).as(Seq("band", "key")))
     val a = keyed.select(col("band"), col("key"), col("doc_id").as("doc_a"))
@@ -599,9 +596,9 @@ object SimilarityOps {
          |FROM ranked WHERE rn <= 3
          |ORDER BY anchor, rn LIMIT 300""".stripMargin) { (s, dir) =>
       val emb = Tables.table(s, dir, "embeddings")
-      // Shared SRP pair frame (r18 — already at this query's 0.10
-      // threshold). The r06 anchor pushdown below the pair dedup is
-      // superseded by the share: the dedup runs once for the four-query
+      // Shared SRP pair frame (already at this query's 0.10 threshold).
+      // An anchor pushdown below the pair dedup is superseded by the
+      // share: the dedup runs once for the four-query
       // family on the full 0.10 pair set instead of once per query on the
       // anchored tenth — strictly less total dedup work, and the anchor
       // filter on the deduped frame is row-identical to the pushed-down
@@ -912,7 +909,7 @@ object SimilarityOps {
          |FROM ranked WHERE rn <= 2
          |ORDER BY anchor, rn LIMIT 300""".stripMargin) { (s, dir) =>
       val emb = Tables.table(s, dir, "embeddings")
-      // shared SRP pair frame + anchor filter — see q111 (r18)
+      // shared SRP pair frame + anchor filter — see q111
       val pairs = srpPairs(s, dir)
         .where(col("doc_a") % 20 === 0 || col("doc_b") % 20 === 0)
       val sym = pairs.select(explode(array(
@@ -945,37 +942,6 @@ object SimilarityOps {
   // broadcast, CC shuffles the pair aggregate only. Singleton records
   // (no fuzzy neighbor) are not clusters and don't appear — the q75
   // convention, mirrored by the oracle's edge-derived node set.
-  /** The q149 atom graph, shared with the guard-sizing dev probe
-    * (tools/Q149Probe) so the probe can never desynchronize from the
-    * shipped edge construction (r11 review finding): returns
-    * (atom groups g [persisted+tracked], fuzzy name pairs nn,
-    * normalized undirected atom edges). */
-  private[graft] def entityAtomGraph(s: org.apache.spark.sql.SparkSession,
-      dir: String): (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val p = Tables.table(s, dir, "part")
-      .select("p_partkey", "p_brand", "p_type", "p_name")
-    val g = graft.engine.CacheReaper.track(
-      p.groupBy("p_name", "p_brand", "p_type")
-        .agg(min("p_partkey").as("node"), count(lit(1)).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val nn = fuzzyNamePairs(s, dir) // shared PassJoin pipeline with q66 (r18)
-    val sym = nn.select(explode(array(
-        struct(col("str_a"), col("str_b")),
-        struct(col("str_b").as("str_a"), col("str_a").as("str_b")))).as("pr"))
-      .select(col("pr.str_a").as("str_a"), col("pr.str_b").as("str_b"))
-    val edges = g.select(col("p_name").as("str_a"), col("p_brand"),
-        col("p_type"), col("node").as("u"))
-      .join(broadcast(sym), "str_a") // vocabulary-scale
-      .join(g.select(col("p_name").as("str_b"), col("p_brand"),
-        col("p_type"), col("node").as("v")), Seq("str_b", "p_brand", "p_type"))
-      .where(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-    (g, nn, edges)
-  }
-
   private val q149 = QueryDef(
     "q149_entity_resolution",
     """WITH RECURSIVE pairs AS (
@@ -1004,7 +970,23 @@ object SimilarityOps {
     // atom edge set is vocabulary×blocks-sized — orders smaller, and the
     // gap widens with row count. Bit-identical to the oracle's row-level
     // recursive closure.
-    val (g, _, edges) = entityAtomGraph(s, dir)
+    val g = graft.engine.CacheReaper.persist(
+      p.groupBy("p_name", "p_brand", "p_type")
+        .agg(min("p_partkey").as("node"), count(lit(1)).as("cnt")))
+    val nn = fuzzyNamePairs(s, dir) // shared PassJoin pipeline with q66
+    val sym = nn.select(explode(array(
+        struct(col("str_a"), col("str_b")),
+        struct(col("str_b").as("str_a"), col("str_a").as("str_b")))).as("pr"))
+      .select(col("pr.str_a").as("str_a"), col("pr.str_b").as("str_b"))
+    val edges = g.select(col("p_name").as("str_a"), col("p_brand"),
+        col("p_type"), col("node").as("u"))
+      .join(broadcast(sym), "str_a") // vocabulary-scale
+      .join(g.select(col("p_name").as("str_b"), col("p_brand"),
+        col("p_type"), col("node").as("v")), Seq("str_b", "p_brand", "p_type"))
+      .where(col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("u"),
+        greatest(col("u"), col("v")).as("v"))
+      .distinct()
     // Bounded CC (r11): the atom graph is vocabulary-derived (distinct
     // names × blocks — 64 names / ~11k atom edges at sf0.1, growing with
     // the VOCABULARY, not the row count), so the edge set collects under

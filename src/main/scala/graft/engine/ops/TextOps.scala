@@ -16,42 +16,38 @@ object TextOps {
 
   private val toks = split(col("text"), " ")
 
-  /** (doc_id, lang, t): per-document DISTINCT tokens, persisted + tracked
-    * (r18, VERDICT r17 #4) — the shared tokenize+explode front end of q114
-    * (OOV docs), q136 (co-occurrence lift) and q140 (chi² features), which
-    * each previously re-ran the full corpus tokenize pass. Consumers that
-    * don't need `lang` project it away; the frame is postings-sized (one
-    * row per distinct token occurrence). */
+  /** (doc_id, lang, t): per-document DISTINCT tokens — the shared
+    * tokenize+explode front end of q114 (OOV docs), q136 (co-occurrence
+    * lift) and q140 (chi² features), so the corpus tokenize pass runs once
+    * per run. Consumers that don't need `lang` project it away; the frame
+    * is postings-sized (one row per distinct token occurrence). */
   private[ops] def distinctTokens(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.engine.CacheReaper.track(
+    graft.engine.CacheReaper.shared(s, dir, "distinctTokens") {
       Tables.table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          explode(array_distinct(toks)).as("t"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col("doc_id"), col("lang"), explode(array_distinct(toks)).as("t"))
+    }
 
-  /** The top-100 vocabulary by document frequency (t, df), persisted +
-    * tracked (r18): q136 and q140 collect the IDENTICAL bounded aggregate
-    * (df over [[distinctTokens]], top-100 by (df desc, t)); sharing it
-    * runs the corpus-wide frequency aggregation once per run. ≤ 100 rows
-    * by construction. */
+  /** The top-100 vocabulary by document frequency (t, df): q136 and q140
+    * collect the IDENTICAL bounded aggregate (df over [[distinctTokens]],
+    * top-100 by (df desc, t)), so the corpus-wide frequency aggregation
+    * runs once per run. ≤ 100 rows by construction. */
   private[ops] def topVocab(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.engine.CacheReaper.track(
+    graft.engine.CacheReaper.shared(s, dir, "topVocab") {
       distinctTokens(s, dir)
         .groupBy("t").agg(count(lit(1)).as("df"))
         .orderBy(col("df").desc, col("t")).limit(100)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }
 
-  /** (doc_id, term, tf): full-token per-document term frequencies,
-    * persisted + tracked (r18) — the shared aggregate of q101 (TF-IDF; its
-    * df/N derive from it) and q118 (BM25; its dl/df/avgdl derive from it),
-    * which each previously re-ran the corpus explode + (doc_id, term)
-    * shuffle. */
+  /** (doc_id, term, tf): full-token per-document term frequencies — the
+    * shared aggregate of q101 (TF-IDF; its df/N derive from it) and q118
+    * (BM25; its dl/df/avgdl derive from it), so the corpus explode +
+    * (doc_id, term) shuffle runs once per run. */
   private[ops] def termFreq(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.engine.CacheReaper.track(
+    graft.engine.CacheReaper.shared(s, dir, "termFreq") {
       Tables.table(s, dir, "documents")
         .select(col("doc_id"), explode(toks).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }
 
   // Fixed marker-token profiles for the n-gram/stopword language heuristic.
   // (The corpus vocabulary is synthetic; profiles are arbitrary but FIXED —
@@ -320,7 +316,7 @@ object TextOps {
       |SELECT doc_id, n_tok, n_oov FROM per WHERE n_oov > 0
       |ORDER BY doc_id LIMIT 300""".stripMargin) { (s, dir) =>
     val docs = Tables.table(s, dir, "documents")
-    val tok = distinctTokens(s, dir).select("doc_id", "t") // shared (r18)
+    val tok = distinctTokens(s, dir).select("doc_id", "t") // shared frame
     val n = docs.agg(count(lit(1)).as("n"))
     val oov = tok.groupBy("t").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(n))
@@ -363,7 +359,7 @@ object TextOps {
       |SELECT doc_id, COUNT(*) AS n_hit_terms, CAST(SUM(micros) AS BIGINT) AS score_micros
       |FROM term GROUP BY doc_id
       |ORDER BY score_micros DESC, doc_id LIMIT 10""".stripMargin) { (s, dir) =>
-    // r18: tf is the family-shared termFreq frame (q101's tfc is the
+    // tf is the family-shared termFreq frame (q101's tfc is the
     // identical aggregate).
     val tf = termFreq(s, dir).select(col("doc_id"), col("term").as("t"), col("tf"))
     // dl and df derive FROM tf (dl = Σtf per doc; df = tf-row count per
@@ -510,13 +506,13 @@ object TextOps {
       |ORDER BY n_ab DESC, ta, tb LIMIT 100""".stripMargin) { (s, dir) =>
     import s.implicits._
     val docs = Tables.table(s, dir, "documents")
-    val tok = distinctTokens(s, dir).select("doc_id", "t") // shared (r18)
+    val tok = distinctTokens(s, dir).select("doc_id", "t") // shared frame
     // Bounded collect-for-broadcast (the BloomFilter precedent): the top-100
     // vocabulary is ≤ 100 rows BY CONSTRUCTION, and materializing it once
     // means the corpus-wide frequency agg runs ONE scan instead of being
     // re-executed for the semi-join and both lift joins (Spark does not
     // reuse broadcast exchanges across different projections of a subplan).
-    // r18: the aggregate itself is the family-shared topVocab frame (q140
+    // The aggregate itself is the family-shared topVocab frame (q140
     // collects the identical one).
     val topRows = topVocab(s, dir)
       .as[(String, Long)].collect().toSeq
@@ -585,8 +581,8 @@ object TextOps {
     // lang rides along through tokenization — the oracle joins tok back to
     // documents on doc_id, but result-equivalence doesn't require the plan
     // to: carrying the label avoids a corpus-size shuffle join entirely.
-    // r18: the tokenized frame and the top-100 aggregate are the
-    // family-shared persisted frames (see distinctTokens/topVocab).
+    // The tokenized frame and the top-100 aggregate are the
+    // family-shared frames (see distinctTokens/topVocab).
     val tok = distinctTokens(s, dir)
     // Bounded collect (q136 precedent): ≤ 100 rows by construction; one
     // corpus scan serves both the semi-join prune and the cell row totals.

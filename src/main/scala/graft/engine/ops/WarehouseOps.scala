@@ -355,10 +355,10 @@ object WarehouseOps {
     * [[layoutPartitions]]) at ~128 MB per output file, floored at the
     * legacy 8 so the local layout (and the bench number) is unchanged
     * while the width grows with the data — the bytes-per-file rule a
-    * production OPTIMIZE ZORDER rewrite applies. A cores-based floor was A/B-measured and
-    * REJECTED (tools/Q122Probe, interleaved, 5/5 reps): 32 range
-    * partitions read +0.5–1.2 s/run slower locally — the single-row-
-    * group testdata gives the exchange a 1-task map side, so extra
+    * production OPTIMIZE ZORDER rewrite applies. A cores-based floor was
+    * REJECTED by an interleaved 5/5-rep A/B (SCALING.md, "q122 layout
+    * width"): 32 range partitions read +0.5–1.2 s/run slower locally —
+    * the single-row-group testdata gives the exchange a 1-task map side, so extra
     * reducers only add range-sampling volume and per-file write/footer
     * overhead. The oracle's probed octant is (max−min)/8 of the z
     * DOMAIN, independent of the file count, and the per-file

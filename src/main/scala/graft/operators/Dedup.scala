@@ -282,13 +282,12 @@ object Dedup {
     // resolved at ACTION time, not DataFrame-construction time.
     val (norm, n) =
       try {
-        val f = graft.engine.CacheReaper.track(pairs
+        val f = graft.engine.CacheReaper.persist(pairs
           .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
           .where(col("a") =!= col("b"))
           .select(fLeast(col("a"), col("b")).as("a"),
             fGreatest(col("a"), col("b")).as("b"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .distinct())
         (f, f.count())
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     if (n > driverMaxEdges) {

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Graph analytics library (r06-late): iterative message-passing operators
@@ -83,20 +82,14 @@ object Graph {
    */
   /** Persist the iteration-invariant tables: without this every unrolled
     * iteration would re-execute the full edge-build lineage (GraphX
-    * persists its edge RDD for exactly this reason). MEMORY_AND_DISK —
-    * the aggregated edge list is orders smaller than the raw data but
-    * need not fit a single executor's memory. Returns (edges+outweight,
-    * distinct nodes). */
+    * persists its edge RDD for exactly this reason). Returns
+    * (edges+outweight, distinct nodes). */
   private def prep(edges: DataFrame): (DataFrame, DataFrame) = {
     val outw = edges.groupBy("src").agg(sum("w").as("ow"))
-    val e = graft.engine.CacheReaper.track(
-      edges.join(outw, "src")
-        .select(col("src"), col("dst"), col("w"), col("ow"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val nodes = graft.engine.CacheReaper.track(
-      e.select(col("src").as("v"))
-        .union(e.select(col("dst").as("v"))).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val e = graft.engine.CacheReaper.persist(
+      edges.join(outw, "src").select(col("src"), col("dst"), col("w"), col("ow")))
+    val nodes = graft.engine.CacheReaper.persist(
+      e.select(col("src").as("v")).union(e.select(col("dst").as("v"))).distinct())
     (e, nodes)
   }
 
@@ -167,17 +160,15 @@ object Graph {
     requireWeightHeadroom(maxW)
     val bSeed = ((100L - d) * Scale) / (100L * nSeeds)
     val r0Seed = Scale / nSeeds
-    val bases = graft.engine.CacheReaper.track(
+    val bases = graft.engine.CacheReaper.persist(
       nodes.join(seedSet.select(col("v"), lit(true).as("__s")),
           Seq("v"), "left")
         .select(col("v"),
           when(col("__s"), lit(bSeed)).otherwise(lit(0L)).as("b"),
-          when(col("__s"), lit(r0Seed)).otherwise(lit(0L)).as("r0"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val eb = graft.engine.CacheReaper.track(
+          when(col("__s"), lit(r0Seed)).otherwise(lit(0L)).as("r0")))
+    val eb = graft.engine.CacheReaper.persist(
       e.join(bases.select(col("v").as("src"), col("b").as("src_b"),
-        col("r0").as("src_r0")), Seq("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        col("r0").as("src_r0")), Seq("src")))
     def step(r: Option[DataFrame]): DataFrame = {
       val contribs = r match {
         case None =>
@@ -234,9 +225,7 @@ object Graph {
   def shortestPaths(edges: DataFrame, sources: DataFrame,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0)
-    val e = graft.engine.CacheReaper.track(
-      edges.select(col("src"), col("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val e = graft.engine.CacheReaper.persist(edges.select(col("src"), col("dst")))
     var d = sources.select(col("v"), lit(0L).as("dist")).localCheckpoint()
     for (_ <- 1 to maxHops) {
       val next = d.unionByName(
