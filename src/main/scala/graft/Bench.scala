@@ -2,293 +2,72 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every declared query at the env-selected
-  * scale factor, prints ONE JSON line.
+  * scale factor and ends stdout with ONE compact JSON contract line.
   *
   * Methodology matches BASELINE.md: a warm session (JVM/classloader/codegen
   * infrastructure initialized by an untimed warmup pass) then one timed
   * execution per query — each query still re-reads its parquet inputs, so
-  * scan/shuffle/agg work is fully counted. */
+  * scan/shuffle/agg work is fully counted. Paired, repeated performance
+  * measurement lives in perfbench/; this object only produces the gate
+  * value and the two host-window signals the contract line carries
+  * (`window_degraded`, `recapture_total`). */
 object Bench {
-  /** Shuffle-canary suspect line on the r12+ binary scale (SCALING.md
-    * §variance: clean floor ~0.31–0.37 s; the pre-r12 0.45 line maps to
-    * ≈0.41 after the relation memo shifted the canary's construction
-    * cost). A canary past it marks a degraded host window. */
+  /** Shuffle-canary suspect line: the q11 canary's clean floor is
+    * ~0.31–0.37 s on the current binary (SCALING.md §variance), and a
+    * canary past 0.41 marks a degraded host window. */
   val canarySuspectLine = 0.41
 
   /** Host-window classification for one pass's shuffle-canary triple:
     * degraded iff ANY canary is past the suspect line. Each canary is
     * already a median-of-3, so one past the line marks a real degraded
     * interval somewhere in the pass, not a spike; a FAILED canary (-1)
-    * must never mark the window degraded (the JSON survives a broken
-    * env without claiming adjudication evidence it doesn't have). */
+    * is never degraded evidence. */
   def degraded(shufflePre: Double, shuffleMid: Double, shufflePost: Double): Boolean =
     math.max(shufflePre, math.max(shuffleMid, shufflePost)) > canarySuspectLine
 
-  /** JSON value for `window_degraded` — tri-state (r15, ADVICE r14 #2;
-    * supersedes r14's all-failed-only `canariesFailed`). "true" when any
-    * SURVIVING canary reads past the suspect line (positive degraded
-    * evidence stands regardless of other failures); "false" ONLY when all
-    * three canaries ran and all read clean; "null" when ANY canary failed
-    * and no survivor read degraded — a partially unclassifiable window
-    * must never read as verified clean. (The r14 predicate emitted null
-    * only when all THREE failed, so a two-failed/one-clean pass still
-    * read `window_degraded:false` — the hole this closes.) */
+  /** JSON value for `window_degraded`, tri-state: "true" when any
+    * SURVIVING canary reads past the suspect line (positive evidence
+    * stands regardless of other failures); "false" ONLY when all three
+    * canaries ran and read clean; "null" when any canary failed and no
+    * survivor read degraded — a partially unclassifiable window must
+    * never read as verified clean. */
   def windowDegradedJson(shufflePre: Double, shuffleMid: Double,
       shufflePost: Double): String =
     if (degraded(shufflePre, shuffleMid, shufflePost)) "true"
     else if (shufflePre < 0 || shuffleMid < 0 || shufflePost < 0) "null"
     else "false"
 
-  /** One pre-flight window-probe record (r14, VERDICT r13 #1): every
-    * probe taken (shuffle-canary medians, -1 = probe failed), total sleep
-    * time, and whether the capture ultimately STARTED in a window the
-    * last probe still called degraded. Tri-state (r15, ADVICE r14 #3):
-    * `None` when the LAST probe failed (-1) — an unknown classification
-    * must not be recorded as "not degraded" when an earlier probe read
-    * degraded; the probes list already disclosed it, now the field itself
-    * agrees. Full transparency — no probe is discarded from the
-    * artifact. */
-  case class Preflight(probes: List[Double], waitedSec: Double,
-      startedDegraded: Option[Boolean]) {
-    def json: String =
-      s"""{"probes":[${probes.mkString(",")}],"waited_sec":$waitedSec,""" +
-        s""""started_degraded":${startedDegraded.map(_.toString).getOrElse("null")}}"""
-  }
-
-  /** Bounded wait-for-a-clean-window policy (r14, VERDICT r13 #1). The
-    * r12/r13 gate decisions were SINGLE blind samples on a documented-
-    * bimodal host — r13 started its capture in the deepest degraded
-    * window of 262 logged runs and read 147.1 s from a binary whose
-    * same-day clean captures read 76.2 s. This probe runs the shuffle
-    * canary BEFORE the timed pass starts: past the suspect line → sleep
-    * `stepSec` and re-probe, up to `maxWaitSec` of total sleep; the
-    * capture starts in the first clean dip, or starts anyway (flagged
-    * `started_degraded`) when the budget is exhausted. This changes WHEN
-    * the measurement runs, never WHAT is measured — no sample is
-    * discarded, and the full probe history ships in the artifact. A
-    * FAILED probe (-1) stops the wait immediately: with no classification
-    * evidence, waiting on it would be acting on data we don't have
-    * (consistent with degraded()'s failed-canary rule) — and the start
-    * classification is then `None` ("unknown"), not "clean" (r15, ADVICE
-    * r14 #3).
-    *
-    * r16 confirm-probe (`confirmGapSec` > 0): the host's degraded phases
-    * are TRAINS of ~20 s wakeup-latency episodes with clean gaps between
-    * them (SCALING.md §variance), so a single clean probe can land in a
-    * gap inside an ongoing train — exactly how the r15 official capture
-    * started (waited 30 s, probe 0.372, window degraded within the pass)
-    * and how r16's 170.67 s capture started after a full 600 s wait. With
-    * a confirm gap, a clean probe only STARTS the capture when a second
-    * probe `confirmGapSec` later ALSO reads clean; a degraded confirm
-    * re-enters the wait loop. Same bounded budget (all sleeps count), and
-    * when no budget remains for the confirm the single clean probe starts
-    * the capture (legacy behavior, disclosed by the probes list). Default
-    * 0 = off, so every pinned legacy case is byte-identical.
-    *
-    * Pure policy — probe and sleep are injected so UnitSpecs can pin the
-    * wait behavior without a host or a clock. */
-  def preflightWait(probe: () => Double, sleep: Double => Unit,
-      stepSec: Double = 30.0, maxWaitSec: Double = 600.0,
-      confirmGapSec: Double = 0.0): Preflight = {
-    val probes = List.newBuilder[Double]
-    var waited = 0.0
-    def take(): Double = { val v = probe(); probes += v; v }
-    def canSleep(s: Double): Boolean = waited + s <= maxWaitSec
-    var last = take()
-    var done = last < 0
-    while (!done && last >= 0) {
-      if (last > canarySuspectLine) {
-        if (canSleep(stepSec)) { sleep(stepSec); waited += stepSec; last = take() }
-        else done = true // budget exhausted: start anyway, flagged degraded
-      } else if (confirmGapSec > 0) {
-        if (canSleep(confirmGapSec)) {
-          sleep(confirmGapSec); waited += confirmGapSec
-          last = take()
-          // Clean confirm → start. Degraded → the loop re-enters the wait;
-          // failed (-1) → the loop exits with classification unknown.
-          if (last >= 0 && last <= canarySuspectLine) done = true
-        } else done = true // no budget left to confirm: single-probe start
-      } else done = true // legacy single-probe mode
-    }
-    Preflight(probes.result(), waited,
-      if (last < 0) None else Some(last > canarySuspectLine))
-  }
-
-  /** One-shot start-restart policy (r15, VERDICT r14 #3). The preflight
-    * probe is a POINT sample: ROUND14's campaign-3 banked the race — a
-    * probe read clean (≤0.41) and the pass's own pre-canary read degraded
-    * (0.486) seconds later. Since the pre-canary pair already runs FIRST
-    * inside the pass, before any query is timed, the contradiction is
-    * detectable at zero cost: when the preflight VERIFIED the window
-    * clean (`Some(false)`) and the shuffle pre-canary then reads past the
-    * suspect line, abort the attempt before timing anything, re-enter the
-    * preflight wait, and start over — ONCE, with both attempts' preflight
-    * records and the aborted canary pair disclosed in the artifact. This
-    * changes WHEN the measurement runs, never WHAT is measured (the same
-    * legitimacy argument as the preflight itself). No restart when the
-    * preflight already said degraded-start (the budget-exhausted start is
-    * the disclosed policy, not a contradiction), when it is unknown
-    * (`None` — no evidence to contradict), or when the pre-canary FAILED
-    * (-1 is not degraded evidence, per degraded()'s rule). */
-  def restartNeeded(startedDegraded: Option[Boolean], shufflePre: Double): Boolean =
-    startedDegraded.contains(false) && shufflePre > canarySuspectLine
-
-  /** Truncation-proof headline (r15, VERDICT r14 #1): the driver's
-    * BENCH_rN.json keeps only the TAIL of stdout and head-truncates the
-    * one-line JSON to `parsed: null` — in r14 the capture total itself
-    * fell off the artifact and had to be recovered from bench_runs.jsonl.
-    * This one-line summary prints AFTER the JSON, so any tail-truncated
-    * capture still carries the verdict-critical numbers. Pure formatter,
-    * pinned by UnitSpecs. */
-  def summaryLine(total: Double, budgetExceeded: Boolean, windowJson: String,
-      preflightWaitedSec: Double, restarted: Boolean,
-      recaptureTotal: Option[Double], cpusDivergent: Boolean = false): String =
-    f"BENCH SUMMARY: total=$total%.2fs budget_exceeded=$budgetExceeded " +
-      f"window_degraded=$windowJson preflight_waited=$preflightWaitedSec%.0fs " +
-      s"restarted=$restarted" +
-      recaptureTotal.map(t => f" recapture_total=$t%.2fs").getOrElse("") +
-      // Divergence is exceptional — print it only when it fires, so the
-      // common clean line stays byte-identical to the r15 format.
-      (if (cpusDivergent) " cpus_divergent=true" else "")
-
   /** The committed record execution mode: local[32] / 32 shuffle
-    * partitions — every era baseline, gate number, and the driver's
-    * official per-round capture run at 32 (r16, ADVICE r15 #1: the r15
-    * campaign inherited the old default of 4 and silently banked 25
-    * local[4] captures against a local[32] era — q90's "doubling" and
-    * part of the q124 drift were exactly that mode gap, confirmed by a
-    * same-binary A/B: q90 steady 0.79 s at 32 vs 1.35 s at 4). */
+    * partitions. Every era baseline and gate number ran at 32, and the
+    * mode alone moves per-query times (q90 steady 0.79 s at 32 vs 1.35 s
+    * at 4 on the same binary). */
   val recordCpus = 32
 
-  /** cpus-divergence gate, the cpu analogue of heap_divergent: any mode
+  /** cpus-divergence flag, the cpu analogue of heap_divergent: any mode
     * other than the record config makes the capture incomparable to the
-    * era baselines (a local[4]-vs-local[32] run is up to a 2× total
-    * difference that canaries cannot flag), so it must be flagged
-    * IN-ARTIFACT, not discovered by post-hoc forensics. Unparseable →
-    * divergent: an unknown mode is not the record mode. */
+    * era baselines (up to a 2× total difference that canaries cannot
+    * flag), so the artifact itself must say so. Unparseable → divergent:
+    * an unknown mode is not the record mode. */
   def cpusDivergent(cpus: String): Boolean =
     cpus.trim.toIntOption match {
       case Some(n) => n != recordCpus
       case None => true
     }
 
-  /** Wakeup-latency sampling (r16). SCALING.md §variance root-caused the
-    * host's degraded phases to hypervisor thread-wakeup stalls: a
-    * `sleep(1 ms)` overshoot probe reads p99 ≈ 0.2 ms on the idle
-    * baseline and p99 3.5–4.9 ms (max 6.7) during capture-killing
-    * episodes — but that probe ran by hand, outside the artifact. Every
-    * timed pass now runs the probe CONCURRENTLY (one daemon thread, all
-    * sleeps — zero measurable load) and banks the overshoot histogram in
-    * the JSON, so window adjudication is direct measurement instead of
-    * canary inference: a gate failure with wakeup p99 at the clean floor
-    * points at the binary; one with p99 in the millisecond class points
-    * at the host. Observational only — the window classifier stays
-    * canary-based and the gate math is untouched.
-    *
-    * CAVEAT (ADVICE r16): the 0.2 ms clean floor was calibrated on an
-    * idle host. During a pass saturating all 32 cores the sleeper's
-    * overshoot also rises from the benchmark's own run-queue contention,
-    * so a millisecond-class in-pass p99 does NOT by itself exonerate the
-    * binary — a genuinely slower binary burns more CPU and elevates p99
-    * too. Only the multi-second max stalls are unambiguous host signal;
-    * read p99 against same-binary gate-pass captures (the under-load
-    * floor), not against the idle 0.2 ms.
-    *
-    * Histogram upper bounds in ms of overshoot; the last bucket is
-    * overflow. Resolution targets the one distinction that matters:
-    * the 0.1–0.2 ms clean class vs the 2–5 ms episode class. */
-  val wakeupBoundsMs: Array[Double] = Array(0.2, 0.5, 1.0, 2.0, 5.0, 10.0, 50.0)
-
-  def wakeupBucket(overshootMs: Double): Int = {
-    val i = wakeupBoundsMs.indexWhere(overshootMs <= _)
-    if (i < 0) wakeupBoundsMs.length else i
-  }
-
-  /** Approximate quantile from the histogram: the upper bound of the
-    * bucket holding the rank-q sample (overflow bucket → the exact max).
-    * -1 with no samples. Upper bounds make the estimate conservative —
-    * it can only over-state the latency, never exonerate a bad window. */
-  def wakeupQuantileMs(counts: Array[Long], q: Double, maxMs: Double): Double = {
-    val total = counts.sum
-    if (total <= 0) return -1.0
-    val rank = math.max(1L, math.ceil(q * total).toLong)
-    var cum = 0L
-    var i = 0
-    while (i < counts.length) {
-      cum += counts(i)
-      if (cum >= rank)
-        return if (i < wakeupBoundsMs.length) wakeupBoundsMs(i) else maxMs
-      i += 1
-    }
-    maxMs
-  }
-
-  /** JSON for one pass's overshoot histogram. `over_1ms` counts samples in
-    * buckets whose LOWER edge is ≥ 1 ms (entirely past the millisecond
-    * line — an undercount, consistent with the conservative quantiles). */
-  def wakeupJson(counts: Array[Long], maxMs: Double): String = {
-    val total = counts.sum
-    if (total <= 0) """{"samples":0}"""
-    else {
-      val firstOver = wakeupBoundsMs.indexWhere(_ >= 1.0) + 1
-      val over1 = counts.drop(firstOver).sum
-      // Locale.ROOT: the f-interpolator uses the default locale, which can
-      // emit comma decimal separators and corrupt the JSON artifact.
-      def ms(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-      s"""{"samples":$total,"p50_ms":${ms(wakeupQuantileMs(counts, 0.50, maxMs))},""" +
-        s""""p99_ms":${ms(wakeupQuantileMs(counts, 0.99, maxMs))},""" +
-        s""""max_ms":${ms(maxMs)},"over_1ms":$over1}"""
-    }
-  }
-
-  /** The concurrent sampler: sleep(1 ms) in a loop, histogram the
-    * overshoot. Daemon + interrupt-stopped so it can never outlive or
-    * stall a capture; the atomic counters make stopJson()'s read safe. */
-  final class WakeupSampler {
-    private val counts =
-      new java.util.concurrent.atomic.AtomicLongArray(wakeupBoundsMs.length + 1)
-    @volatile private var maxMs = 0.0
-    @volatile private var running = true
-    private val thread = new Thread(() => {
-      while (running) {
-        val t0 = System.nanoTime()
-        try Thread.sleep(1) catch { case _: InterruptedException => () }
-        val over = math.max(0.0, (System.nanoTime() - t0) / 1e6 - 1.0)
-        if (over > maxMs) maxMs = over
-        counts.incrementAndGet(wakeupBucket(over))
-      }
-    }, "bench-wakeup-sampler")
-    thread.setDaemon(true)
-    def start(): this.type = { thread.start(); this }
-    def stopJson(): String = {
-      running = false
-      thread.interrupt()
-      try thread.join(1000) catch { case _: InterruptedException => () }
-      wakeupJson(Array.tabulate(counts.length())(counts.get), maxMs)
-    }
-  }
-
   /** JSON rendering of the cpus env value: a number when parseable (every
-    * legitimate mode), a quoted string otherwise — the old bare
-    * interpolation made `"cpus":all` silently corrupt the whole line when
-    * the env was garbage, which is exactly the artifact that must survive
-    * a broken env. */
+    * legitimate mode), a quoted string otherwise, so a garbage env value
+    * cannot corrupt the line. */
   def cpusJson(cpus: String): String =
     cpus.trim.toIntOption.map(_.toString).getOrElse("\"" + cpus + "\"")
 
-  /** Compact driver-contract line (r18, VERDICT r17 #1). The driver's
-    * PERF adjudication has read `parsed: null` for 18 straight rounds: the
-    * old contract line carried ~7 KB of per-query 9-decimal seconds plus
-    * wakeup/preflight/retimed/restart/recapture diagnostics, and the
-    * driver keeps only a stdout TAIL, head-truncating it. This line is the
-    * contract fields ONLY — per-query seconds at millisecond precision,
-    * scalars placed AFTER the queries map so even a tail-truncated copy
-    * still carries total/gate/window — printed as the FINAL stdout line.
-    * The full-precision diagnostics JSON still ships, in
-    * bench_full_latest.json and bench_runs.jsonl (unchanged format), so
-    * nothing is lost to forensics. Failed queries stay -1 in the map, the
-    * same convention as the full artifact. Pure formatter, pinned by
-    * UnitSpecs. */
+  /** The contract line, printed as the FINAL stdout line. The gate
+    * capture keeps only a stdout tail, so the line carries the contract
+    * fields only — per-query seconds at millisecond precision, scalars
+    * AFTER the queries map so even a tail-truncated copy still carries
+    * total/gate/window. Full-precision diagnostics ship in
+    * bench_full_latest.json and bench_runs.jsonl. Failed queries stay -1
+    * in the map, the same convention as the full artifact. Pure
+    * formatter, pinned byte for byte by UnitSpecs. */
   def contractLine(total: Double, cpus: String, cpusDivergent: Boolean,
       heapReqGb: Double, heapDivergent: Boolean,
       queries: Seq[(String, Double, Boolean)],
@@ -315,36 +94,19 @@ object Bench {
       s""""value":${sec(total)},"sf":"$sf"}"""
   }
 
-  /** The untimed warm-session list (BASELINE.md methodology): each entry
-    * initializes a plan SHAPE's one-time codegen/infrastructure at
-    * sf0.001 so the timed slots measure query work, not first-touch
-    * compilation. Exposed as a value (r17) so probe tools
-    * (WarmupGapProbe) exercise the EXACT bench warmup instead of a
-    * drifting copy.
-    *
-    * r17 (optimization round): EVERY declared query, in the timed loop's
-    * sorted order — the completion of the incremental r05→r07 curation
-    * (q66, q111, q124, the graph family, ...) that added the worst
-    * offenders one by one as each was measured. WarmupGapProbe measured
-    * the residual: with only the 20 curated shapes warmed, first-in-
-    * family queries still paid 0.5–4.7 s of one-time codegen in their
-    * timed slots (q122's 80-term z-value interleave +4.7 s, q136 +2.8,
-    * q118/q121/q123/q126–q129/q137 +0.7–1.4 each — both probe passes and
-    * the no-warmup TimeProbe agree on the set). The methodology already
-    * declares exactly this cost out of the timed contract ("timed runs
-    * measure query work, not first-touch class loading"), so the
-    * principled list is ALL shapes, not a curation that chases the next
-    * offender each round. Warmup stays at sf0.001 (shape compilation,
-    * not target-sf data warming) and each warmup failure is still
-    * surfaced in `warmup_failed`. Adds ~30–60 s of untimed wall per
-    * capture — bounded, disclosed, and far cheaper than the timed-slot
-    * noise it removes. */
+  /** The untimed warm-session list (BASELINE.md methodology): every
+    * declared query, in the timed loop's sorted order, run once at
+    * sf0.001. Each entry compiles its plan SHAPE's one-time codegen so
+    * the timed slots measure query work, not first-touch compilation;
+    * with only a curated subset warmed, first-in-family queries paid
+    * 0.5–4.7 s of codegen in their timed slots (q122 +4.7 s, q136 +2.8).
+    * Each warmup failure is surfaced in `warmup_failed`. */
   val warmupQueries: Seq[String] = SparkEntry.queries.keys.toSeq.sorted
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default = the record config (r16): an unset env now yields a
-    // gate-comparable capture instead of a silently divergent local[4] one.
+    // Default = the record config: an unset env yields a gate-comparable
+    // capture instead of a silently divergent one.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", recordCpus.toString)
     // tmpfs scratch for checkpoints/sinks/shuffle when available — the
     // local-mode analogue of a cluster's fast local disks (see FastScratch)
@@ -359,41 +121,31 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup on the smallest sf: initializes Hadoop FS, parquet
     // read AND write paths (committers), codegen, shuffle, window/join,
-    // and streaming infrastructure once — so timed runs measure query
-    // work, not first-touch class loading (BASELINE.md's warm-session
-    // methodology).
+    // and streaming infrastructure once. A warmup that throws is an
+    // early warning (a schema drift shows up here first), so each failure
+    // goes to stderr AND into the JSON as warmup_failed.
     val warmSf = "/root/testdata/sf0.001"
-    // A warmup that throws is an early-warning signal, not noise (r06,
-    // VERDICT r05 #2): in r05 two warmup queries silently swallowed the
-    // events-ts regression that later failed 25 timed queries. Each failure
-    // is logged to stderr AND recorded in the JSON as warmup_failed.
     val warmupFailed = scala.collection.mutable.ListBuffer[String]()
-    Bench.warmupQueries
-      .foreach { q =>
-        try SparkEntry.queries(q)(spark, warmSf).count()
-        catch { case e: Throwable =>
-          warmupFailed += q
-          System.err.println(s"BENCH WARMUP FAILURE: $q — " +
-            String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse(e.toString))
-        }
+    warmupQueries.foreach { q =>
+      try SparkEntry.queries(q)(spark, warmSf).count()
+      catch { case e: Throwable =>
+        warmupFailed += q
+        System.err.println(s"BENCH WARMUP FAILURE: $q — " +
+          String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse(e.toString))
       }
+    }
     // q52 models a PRE-EXISTING bucketed table (its layout write is "paid
-    // once" and amortized at a deterministic per-sf path — see Formats).
-    // In a fresh container that cache is cold at the TARGET sf, so the
-    // timed q52 would measure the one-time layout write instead of the
-    // shuffle-free join under test: materialize it untimed here.
+    // once" and amortized at a deterministic per-input path — see
+    // Formats). In a fresh container that cache is cold at the TARGET sf,
+    // so the timed q52 would measure the one-time layout write instead of
+    // the shuffle-free join under test: materialize it untimed here.
     try SparkEntry.queries("q52_bucketed_join")(spark, sfDir).count()
     catch { case _: Throwable => () }
-    // Canary helper (see below). Timed canaries bracket the suite: the
-    // post-suite pair is the established host-mode signal, and the
-    // PRE-suite pair (r04-end) catches the other failure shape — a window
-    // that was already degraded when the suite STARTED but drained before
-    // the post-suite canaries ran (observed: totals inflated 10-20% with
-    // clean closing canaries). Both pairs are untimed w.r.t. the gate.
-    // Transparency note: running q28/q11 here ALSO warms them at the
-    // target sf before their timed runs (≈0.05-0.1 s each) — the same
-    // warm-session treatment the warmup list gives every declared query
-    // (at sf0.001), now visible in the methodology instead of implicit.
+    // Canary = median-of-3 of one query at the target sf, untimed w.r.t.
+    // the gate; -1 on failure so the JSON survives a broken env. Running
+    // q28/q11 here also warms them at the target sf before their timed
+    // slots (≈0.05-0.1 s each), the same treatment the warmup list gives
+    // every query at sf0.001.
     def canaryOf(q: String): Double = try {
       (1 to 3).map { _ =>
         val t0 = System.nanoTime()
@@ -401,50 +153,32 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }.sorted.apply(1)
     } catch { case _: Throwable => -1.0 }
-    // A throwing query must NOT silently deflate the total: it is recorded
-    // as -1 in the per-query map AND listed under "failed", so a broken
-    // query can never make the perf gate look better.
-    // A MID-RUN canary pair fires halfway through the timed loop (untimed
-    // w.r.t. the gate): the pre/post bracket has twice recorded clean
-    // endpoints around a contended MIDDLE (r06-late: one run's q100–q111
-    // block inflated 3–10× while both bracket canaries read clean). Three
-    // canary points make that failure shape visible in the JSON itself.
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-    /** One timed pass over the full suite with its own canary bracket
-      * (pre / mid / post, each pair trivial + shuffle-weight). Factored out
-      * (r13, VERDICT r12 #4) so a gate-fail-in-degraded-window can append a
-      * SECOND full capture to the same artifact. The post pair now runs
-      * IMMEDIATELY after the loop (before any over-budget retimes) — in the
-      * common empty-over_budget case this is byte-identical to the old
-      * order, and when retimes do fire the post pair now reads the window
-      * the SUITE ended in, which is what it classifies. */
+    /** One timed pass with its canary bracket: each bracket point is a
+      * trivial (q28 top-k) + shuffle-weight (q11 join) pair. The pre pair
+      * catches a window that was degraded at the start and drained before
+      * the end; the mid pair catches a contended middle between clean
+      * endpoints; the post pair classifies the window the suite ended in.
+      * A throwing query is recorded as failed (-1 in the map, listed in
+      * "failed") and never deflates the total. */
     case class Pass(results: Seq[(String, Double, Boolean)],
         pre: Double, shufflePre: Double, mid: Double, shuffleMid: Double,
-        post: Double, shufflePost: Double, wakeupJson: String) {
+        post: Double, shufflePost: Double) {
       def total: Double = results.collect { case (_, v, true) => v }.sum
       def qsJson: String = results.map { case (k, v, ok) =>
         "\"" + k + "\":" + (if (ok) v else -1.0) }.mkString("{", ",", "}")
       def failedJson: String = results.collect { case (k, _, false) =>
         "\"" + k + "\"" }.mkString("[", ",", "]")
-      /** Host-window classification (r13, VERDICT r12 #4): the shuffle
-        * canary's clean floor on r12+ binaries is ~0.31–0.37 s and degraded
-        * windows read past the suspect line (SCALING.md §variance maps the
-        * pre-r12 0.45 line to ≈0.41 on this binary's scale). Tri-state
-        * JSON (r15, ADVICE r14 #2): "null" whenever ANY canary failed and
-        * no survivor read degraded — see Bench.windowDegradedJson. */
       def windowDegradedJson: String =
         Bench.windowDegradedJson(shufflePre, shuffleMid, shufflePost)
+      def canariesJson: String =
+        s""""canary_pre_sec":$pre,"canary_shuffle_pre_sec":$shufflePre,""" +
+          s""""canary_mid_sec":$mid,"canary_shuffle_mid_sec":$shuffleMid,""" +
+          s""""canary_sec":$post,"canary_shuffle_sec":$shufflePost"""
     }
-    // The pre-canary pair runs OUTSIDE timedPass since r15 so the
-    // start-restart policy (Bench.restartNeeded) can read the shuffle
-    // pre-canary BEFORE any query is timed; timedPass receives the pair
-    // and the timed loop itself is unchanged.
-    def preCanaries(): (Double, Double) =
-      (canaryOf("q28_topk_global"), canaryOf("q11_join_shuffle"))
-    def timedPass(pre: Double, shufflePre: Double): Pass = {
-      // Wakeup-latency sampler (r16): runs for exactly the duration of the
-      // timed pass, so the banked histogram classifies THIS pass's window.
-      val sampler = new Bench.WakeupSampler().start()
+    def timedPass(): Pass = {
+      val pre = canaryOf("q28_topk_global")
+      val shufflePre = canaryOf("q11_join_shuffle")
       var mid = -1.0
       var shuffleMid = -1.0
       val res = sorted.zipWithIndex.map { case ((name, fn), i) =>
@@ -458,239 +192,51 @@ object Bench {
       }
       val post = canaryOf("q28_topk_global")
       val shufflePost = canaryOf("q11_join_shuffle")
-      val wakeup = sampler.stopJson()
-      System.err.println(s"BENCH WAKEUP: $wakeup")
-      Pass(res, pre, shufflePre, mid, shuffleMid, post, shufflePost, wakeup)
+      Pass(res, pre, shufflePre, mid, shuffleMid, post, shufflePost)
     }
-    // Pre-flight window probe (r14, VERDICT r13 #1): refuse to START a
-    // gate capture in a window the shuffle canary already calls degraded —
-    // wait it out on a bounded schedule instead (see preflightWait). The
-    // probe ALSO gives q11 the same implicit target-sf warm the canary
-    // bracket always has (disclosed, untimed w.r.t. the gate).
-    def preflightProbe(): Preflight = {
-      // confirmGapSec=15 (r16): a clean probe must be CONFIRMED by a second
-      // clean probe 15 s later before the capture starts — a single probe
-      // can land in the clean gap inside an episode train (see
-      // preflightWait's scaladoc; both the r15 official capture and r16's
-      // 170.67 s capture started on exactly such a single-probe green).
-      val pf = preflightWait(() => canaryOf("q11_join_shuffle"),
-        s => Thread.sleep((s * 1000).toLong), confirmGapSec = 15.0)
-      if (pf.waitedSec > 0)
-        System.err.println(f"BENCH PREFLIGHT: waited ${pf.waitedSec}%.0f s for a " +
-          f"clean host window (probes ${pf.probes.map(p => f"$p%.2f").mkString(",")}; " +
-          s"started_degraded=${pf.startedDegraded.map(_.toString).getOrElse("null")})")
-      pf
-    }
-    /** One full gate-grade capture: preflight wait → pre-canary pair →
-      * one-shot restart when the pre-canary contradicts a verified-clean
-      * probe (r15, VERDICT r14 #3; see Bench.restartNeeded) → timed pass.
-      * `preflight` is the record of the attempt that actually STARTED;
-      * the aborted attempt's preflight + canary pair ship under
-      * `restart` so no sample is discarded from the artifact. */
-    case class Capture(preflight: Preflight, pass: Pass,
-        restart: Option[(Preflight, Double, Double)]) {
-      def restartJson: String = restart.map { case (pf, pre, spre) =>
-        s"""{"aborted_canary_pre_sec":$pre,"aborted_canary_shuffle_pre_sec":$spre,""" +
-          s""""preflight":${pf.json}}"""
-      }.getOrElse("null")
-    }
-    def capture(): Capture = {
-      val pf1 = preflightProbe()
-      val (pre1, spre1) = preCanaries()
-      if (Bench.restartNeeded(pf1.startedDegraded, spre1)) {
-        System.err.println(f"BENCH RESTART: shuffle pre-canary $spre1%.2f s " +
-          "contradicts a verified-clean preflight probe — aborting before any " +
-          "query is timed, re-entering the preflight wait (one-shot; both " +
-          "attempts disclosed in the artifact)")
-        val pf2 = preflightProbe()
-        val (pre2, spre2) = preCanaries()
-        Capture(pf2, timedPass(pre2, spre2), Some((pf1, pre1, spre1)))
-      } else Capture(pf1, timedPass(pre1, spre1), None)
-    }
-    val firstCapture = capture()
-    val preflight = firstCapture.preflight
-    val pass = firstCapture.pass
-    val results = pass.results
-    val canaryPre = pass.pre
-    val canaryShufflePre = pass.shufflePre
-    val canaryMid = pass.mid
-    val canaryShuffleMid = pass.shuffleMid
-    val qs = pass.qsJson
-    val failed = pass.failedJson
+    val pass = timedPass()
     val total = pass.total
-    // Budget guard (SCALING.md §Bench budget): surface growth must not creep
-    // toward the 90 s gate silently. Queries over the 3.5 s per-query budget
-    // and totals over the 75 s soft budget are CALLED OUT in the JSON (the
-    // host is bimodal, so one slow sample is a signal, not proof); a total
-    // past the 90 s hard gate sets budget_exceeded + a stderr FAILURE line.
-    // The process still exits 0 — the gate is a flag, not a process failure,
-    // so a stalled host window can never destroy the benchmark capture.
+    // Budget guard (SCALING.md §Bench budget): queries over the 3.5 s
+    // per-query budget and totals over the soft budget are CALLED OUT in
+    // the JSON; a total past the 90 s hard gate sets budget_exceeded and
+    // a stderr FAILURE line. The process still exits 0 — the gate is a
+    // flag, so a stalled host window never destroys the capture. The soft
+    // budget scales with the declared surface (0.67 s/query, the clean
+    // average is ~0.65); the hard gate is absolute because it is the
+    // contract.
     val perQueryBudget = 3.5
-    // Soft budget scales with the declared surface (0.67 s/query — the
-    // measured clean-mode average is ~0.65): an absolute number meant for
-    // 110 queries would warn on every clean run at 120+ and train readers
-    // to ignore it. The HARD gate stays absolute — it is the contract.
     val softTotal = math.min(0.67 * SparkEntry.queries.size, 85.0)
     val hardTotal = 90.0
-    val overBudgetKeys = results.collect {
+    val overBudgetKeys = pass.results.collect {
       case (k, v, true) if v > perQueryBudget => k
     }
-    val overBudget = overBudgetKeys.map("\"" + _ + "\"").mkString("[", ",", "]")
     val exceeded = total > hardTotal
-    // Auto re-capture (r13, VERDICT r12 #4): the gate decision has been a
-    // single sample on a documented-bimodal host — r12 failed at 90.3 s in
-    // a mild-degraded window while the same binary's clean captures read
-    // 75.8 s. When the total fails the hard gate, run ONE more full pass
-    // (r14-late: regardless of window classification — see the trigger
-    // note below) and ship BOTH totals in the SAME artifact. Nothing is
-    // replaced and
-    // budget_exceeded stays keyed to the FIRST capture — this is evidence
-    // for the adjudicator, not gate gaming; a reader sees 90.3-in-a-bad-
-    // window next to what an adjacent window reads instead of having to
-    // re-run by hand. Capped at one: two degraded samples in a row are
-    // themselves the honest answer. MUST run BEFORE retimedCold (review
-    // r13): that block releases every library cache per key, so a
-    // recapture placed after it would start in a state no fresh capture
-    // ever sees. The recapture starts LIBRARY-COLD itself (same
-    // semantics as retimed_cold: tracked caches + schema/relation memo
-    // released; JIT, codegen, and the OS page cache stay warm) — without
-    // the release, the cross-query caches the FIRST pass built (the
-    // graph family's edge aggregates, q149's CC inputs) survive into the
-    // second pass and its graph tier reads ~2–3 s faster than any honest
-    // fresh capture (measured on the first two real firings: q139
-    // 2.56→1.42, q152 1.72→0.88, q145 1.03→0.51). Library-cold is
-    // slightly CONSERVATIVE (a real bench start also has the sf0.001
-    // warmup's schema entries) — the right direction for adjudication
-    // evidence. (First real firing, same day: first pass 90.31 s at
-    // mid-canary 0.513, recapture 80.64 s — warm-biased; post-fix
-    // recaptures are directly gate-comparable.)
-    // r14 (VERDICT r13 #2): the recapture now pre-flight-waits too. The
-    // r13 firing proved the gap — the recapture ran IMMEDIATELY and landed
-    // at 105.2 s with canaries still degraded: one honest sample of a deep
-    // phase, but not the adjacent-window evidence the recapture exists to
-    // provide. Same bounded wait, same transparency fields; still capped
-    // at ONE recapture and budget_exceeded stays keyed to the FIRST
-    // capture (the r13 honesty contract).
-    // r14 (late): the trigger widened from `exceeded && windowDegraded`
-    // to ANY hard-gate failure. The r14 campaign banked the motivating
-    // sample: a 90.48 s capture with all-clean canaries, empty
-    // over_budget (diffuse host load inflates every query +0.1–0.3 s
-    // without crossing the 3.5 s per-query line), no retimes — a gate
-    // failure carrying ZERO in-artifact adjudication evidence. A
-    // recapture self-adjudicates both ways: a structural regression
-    // REPRODUCES its slow total (evidence for the failure); diffuse host
-    // load reads the adjacent window (evidence it was the host). Nothing
-    // is replaced either way.
-    // r15: the recapture goes through the same capture() path as the gate
-    // capture, so it inherits both the preflight wait AND the one-shot
-    // start-restart — its own preflight/restart records ship inside the
-    // recapture object.
-    val recapture: Option[Capture] =
+    // One recapture on a hard-gate failure, shipped next to the first
+    // pass: a structural regression reproduces its slow total, a noisy
+    // host window reads the adjacent window instead. Nothing is replaced
+    // and budget_exceeded stays keyed to the first pass. The recapture
+    // starts LIBRARY-cold (shared frames, per-call caches and the
+    // schema/relation memo released; JIT, codegen and the OS page cache
+    // stay warm): without the release the graph tier reuses the first
+    // pass's frames and reads 1–3 s faster than any fresh capture.
+    val recapture: Option[Pass] =
       if (exceeded) {
         graft.engine.CacheReaper.release()
         graft.engine.Tables.clearSchemaCache()
-        Some(capture())
+        Some(timedPass())
       } else None
-    val recaptureJson = recapture.map { c =>
-      val p = c.pass
+    val recaptureJson = recapture.map { p =>
       s"""{"value":${p.total},"queries":${p.qsJson},"failed":${p.failedJson},""" +
-        s""""canary_pre_sec":${p.pre},"canary_shuffle_pre_sec":${p.shufflePre},""" +
-        s""""canary_mid_sec":${p.mid},"canary_shuffle_mid_sec":${p.shuffleMid},""" +
-        s""""canary_sec":${p.post},"canary_shuffle_sec":${p.shufflePost},""" +
-        s""""window_degraded":${p.windowDegradedJson},"wakeup":${p.wakeupJson},""" +
-        s""""preflight":${c.preflight.json},"restart":${c.restartJson}}"""
+        s"""${p.canariesJson},"window_degraded":${p.windowDegradedJson}}"""
     }.getOrElse("null")
-    // Over-budget re-time (r07, VERDICT r06 #4): a query over the per-query
-    // budget is re-timed ONCE after the suite (untimed w.r.t. the gate and
-    // the total). A structural regression reproduces its slow time here; a
-    // host-window spike recovers — the JSON self-adjudicates the ambiguity
-    // that made r06's q12 5.18-vs-1.58 call require bench_runs archaeology.
-    // Known bias (ADVICE r07): the re-time runs with every long-lived cache
-    // warm (graph edge caches, schema cache, JIT), so it measures STEADY
-    // cost, not first-run cost — it can exonerate a window spike but cannot
-    // distinguish "structurally slow first run" from one; a genuine
-    // cache-materialization cost re-times fast. That is the intended
-    // contract (steady state is what the per-query budget models; the
-    // warmup list exists precisely to keep one-time costs out of timed
-    // slots), but read `retimed` as steady-state evidence only.
-    // Window context for the retimes (r11, VERDICT r10 #7): a retime read
-    // in a different host window than the suite is uninterpretable alone
-    // (q139's 3.66→3.18 s cold-retime swing across r9/r10). Capture the
-    // shuffle canary IMMEDIATELY before the retime block so each round's
-    // retimes carry their own window classification.
-    val canaryRetime =
-      if (overBudgetKeys.isEmpty) -1.0 else canaryOf("q11_join_shuffle")
-    val retimed = overBudgetKeys.map { k =>
-      val t = try {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(k)(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
-      "\"" + k + "\":" + t
-    }.mkString("{", ",", "}")
-    // Host-mode canary (SCALING.md §variance): this host is bimodal, and a
-    // stalled run inflates EVERY query ~uniformly. The post-suite trivial
-    // canary (global top-10 over 150k rows; ~0.2 s clean, ≥3× that stalled)
-    // records which mode this run ENDED in — measured inside the pass,
-    // immediately after the loop (see timedPass).
-    // -1 on any canary failure: the JSON line must survive a broken env
-    val canary = pass.post
-    // Second, shuffle-weight canary (r04-end): the trivial canary reads
-    // ~0.1–0.2 s in BOTH the clean mode and the milder degraded mode (only
-    // gross stalls move it), but a real shuffle workload discriminates.
-    // SCALE NOTE (r12): the canary is timed through SparkEntry.queries, so
-    // the Tables relation memo shifted its floor — clean reads ~0.31–0.37
-    // on r12+ binaries vs 0.39–0.41 across r04–r11 history; degraded
-    // windows read ~0.45+ (old scale ~0.5–1.25). Bucket cross-round canary
-    // comparisons by binary era (SCALING.md §variance). Untimed
-    // (post-suite), so it costs nothing against the gate.
-    val canaryShuffle = pass.shufflePost
-    // COLD re-time (r09, VERDICT r08 #3 — the ADVICE r07 carry-over): the
-    // warm `retimed` above runs with every long-lived cache alive, so it
-    // can EXONERATE a host-window spike but cannot CONFIRM a structural
-    // regression whose cost hides in cache/first-run materialization.
-    // Release the library's tracked caches (graph edge aggregates et al.)
-    // and the parquet schema cache first, then re-time each over-budget
-    // query once more: a query still fast here was a window spike
-    // (two-sided verdict); a query slow here pays a real repeatable cost.
-    // Semantics: "cold" = LIBRARY-cold — JIT, codegen caches, and the OS
-    // page cache stay warm, i.e. the state a fresh bench process sees
-    // after its warmup list, NOT a cold-disk cluster start. Runs after
-    // the canaries so their environment is identical to prior rounds;
-    // untimed w.r.t. the gate and the total. Caches are released INSIDE
-    // the per-key loop (r11, ADVICE r09 #3 carry-over): with one release
-    // up front, the first key of a cache-sharing family (e.g. the graph
-    // edge aggregate) repopulated the cache and every later family member
-    // retimed WARM while being reported as cold.
-    val retimedCold = if (overBudgetKeys.isEmpty) "{}" else {
-      overBudgetKeys.map { k =>
-        graft.engine.CacheReaper.release()
-        graft.engine.Tables.clearSchemaCache()
-        val t = try {
-          val t0 = System.nanoTime()
-          SparkEntry.queries(k)(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
-        "\"" + k + "\":" + t
-      }.mkString("{", ",", "}")
-    }
     val warmFailedJson = warmupFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // cpus/heap in the record (r07): a local[4]-vs-local[32] run is a 2x
-    // total difference that canaries cannot flag — the run must carry its
-    // own execution mode for post-hoc forensics.
     val heapGb = Runtime.getRuntime.maxMemory() / (1 << 30)
-    // Heap-divergence flag (r08, VERDICT r07 #1a; tightened r09, ADVICE
-    // r08 #3): the measured-optimal config is a 16 GiB ParallelGC heap —
-    // build.sbt clamps every larger SPARK_DRIVER_MEM request down TO 16g
-    // (there is no larger ceiling), so any heap above it means a direct
-    // -Xmx launch bypassing sbt, which is not the committed record config
-    // (the 16g/96g/16g A/B measured 83.7/166.3/83.8 s on the same binary
-    // in the same clean window: heap size alone doubled the total, with
-    // every spike retiming clean — SCALING.md §variance). Under 10 GiB
-    // starves the 32-thread local executor instead. The test reads the
-    // REQUESTED -Xmx from the JVM arguments, not maxMemory(): ParallelGC
-    // under-reports (16g reads ~15 after survivor-space deduction), so
-    // floor(maxMemory)>17 let an 18-19g bypass slip through as "16-17".
+    // Heap-divergence flag: build.sbt clamps every SPARK_DRIVER_MEM
+    // request down to the measured-optimal 16 GiB ParallelGC heap, so a
+    // heap above it means a direct -Xmx launch bypassing sbt (16g/96g/16g
+    // measured 83.7/166.3/83.8 s on one binary, SCALING.md §variance);
+    // under 10 GiB starves the 32-thread local executor. Reads the
+    // REQUESTED -Xmx, not maxMemory(), which ParallelGC under-reports.
     val xmxReqGb: Double = {
       import scala.jdk.CollectionConverters._
       val re = "(?i)^-Xmx(\\d+)([gmk]?)$".r
@@ -710,49 +256,24 @@ object Bench {
       System.err.println(f"BENCH HEAP DIVERGENCE: requested -Xmx $xmxReqGb%.1f GiB " +
         "vs the measured-optimal 16g clamp — timings are not comparable to " +
         "the committed record config; see build.sbt clampHeap and SCALING.md")
-    val cpuDivergent = Bench.cpusDivergent(cpus)
+    val cpuDivergent = cpusDivergent(cpus)
     if (cpuDivergent)
       System.err.println(s"BENCH CPUS DIVERGENCE: running local[$cpus] vs the " +
-        s"record config local[${Bench.recordCpus}] — timings are not comparable " +
-        "to the era baselines (ADVICE r15 #1); unset SPARK_GRAFT_CPUS or set " +
-        s"it to ${Bench.recordCpus} for a gate-grade capture")
-    // Full-precision diagnostics JSON — FILE artifacts only since r18
-    // (VERDICT r17 #1): at ~7 KB it head-truncated in the driver's
-    // tail-kept stdout artifact every round since r01 (`parsed: null`),
-    // so stdout now carries the compact contract line below instead and
-    // this line ships via bench_full_latest.json + bench_runs.jsonl
-    // (same format as always, plus warmup_n — ADVICE r17 #3: the warmup-
-    // list version must be machine-detectable for cross-round
-    // comparability).
-    val jsonLine = s"""{"metric":"total","value":$total,"unit":"sec","cpus":${Bench.cpusJson(cpus)},"cpus_divergent":$cpuDivergent,"heap_gb":$heapGb,"heap_req_gb":$xmxReqGb,"heap_divergent":$heapDivergent,"warmup_n":${Bench.warmupQueries.size},"queries":$qs,"failed":$failed,"warmup_failed":$warmFailedJson,"over_budget":$overBudget,"canary_retime_sec":$canaryRetime,"retimed":$retimed,"retimed_cold":$retimedCold,"soft_budget_sec":$softTotal,"budget_exceeded":$exceeded,"canary_pre_sec":$canaryPre,"canary_shuffle_pre_sec":$canaryShufflePre,"canary_mid_sec":$canaryMid,"canary_shuffle_mid_sec":$canaryShuffleMid,"canary_sec":$canary,"canary_shuffle_sec":$canaryShuffle,"window_degraded":${pass.windowDegradedJson},"wakeup":${pass.wakeupJson},"canary_suspect_line_sec":${Bench.canarySuspectLine},"preflight":${preflight.json},"restart":${firstCapture.restartJson},"recapture":$recaptureJson,"sf":"$sfDir"}"""
-    // Truncation-proof headline (r15, VERDICT r14 #1), now printed BEFORE
-    // the contract line: the contract line itself is the final stdout
-    // line since r18. Mirrored to stderr for log forensics.
-    val summary = Bench.summaryLine(total, exceeded, pass.windowDegradedJson,
-      preflight.waitedSec, firstCapture.restart.isDefined,
-      recapture.map(_.pass.total), cpuDivergent)
-    println(summary)
-    System.err.println(summary)
-    // Full per-query artifact (r05, VERDICT r04 #4): the driver's
-    // BENCH_r*.json keeps only the tail of stdout, so early-alphabet query
-    // timings were unrecoverable from the round record. Persist the SAME
-    // JSON (all per-query times + the canary quartet) to a repo file the
-    // round can commit, keyed per round via env. Best-effort: a read-only
-    // cwd must not fail the capture. The default is the round-NEUTRAL
-    // "latest" name (r11, ADVICE r10 #1): a hardcoded round-numbered
-    // default let the r10 driver run overwrite the committed r9 artifact
-    // in place — per-round files are now created only by an explicit
-    // SPARK_GRAFT_BENCH_FULL=bench_full_rN.json.
+        s"record config local[$recordCpus] — timings are not comparable " +
+        "to the era baselines; unset SPARK_GRAFT_CPUS or set it to " +
+        s"$recordCpus for a gate-grade capture")
+    // Full-precision diagnostics JSON: too large for a kept stdout tail,
+    // so it goes only to the two file artifacts below.
+    val jsonLine = s"""{"metric":"total","value":$total,"unit":"sec","cpus":${cpusJson(cpus)},"cpus_divergent":$cpuDivergent,"heap_gb":$heapGb,"heap_req_gb":$xmxReqGb,"heap_divergent":$heapDivergent,"warmup_n":${warmupQueries.size},"queries":${pass.qsJson},"failed":${pass.failedJson},"warmup_failed":$warmFailedJson,"over_budget":${overBudgetKeys.map("\"" + _ + "\"").mkString("[", ",", "]")},"soft_budget_sec":$softTotal,"budget_exceeded":$exceeded,${pass.canariesJson},"window_degraded":${pass.windowDegradedJson},"canary_suspect_line_sec":$canarySuspectLine,"recapture":$recaptureJson,"sf":"$sfDir"}"""
+    // bench_full_latest.json is overwritten per run (SPARK_GRAFT_BENCH_FULL
+    // names a per-round copy); bench_runs.jsonl is append-only and
+    // wall-clock stamped, so no later run erases an earlier measurement.
+    // Both best-effort: a read-only cwd must not fail the capture.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full_latest.json")),
       jsonLine + "\n")
     catch { case _: Throwable => () }
-    // Append-only run history (r06, ADVICE r05 #1): the driver's post-round
-    // run OVERWRITES the per-round file above, which in r05 destroyed the
-    // builder's committed clean capture as cited evidence. Every run also
-    // appends here (wall-clock stamped), so no later run erases an earlier
-    // measurement. Best-effort like the file above.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_runs.jsonl"),
       s"""{"at_epoch_ms":${System.currentTimeMillis()},${jsonLine.drop(1)}""" + "\n",
@@ -760,32 +281,22 @@ object Bench {
       java.nio.file.StandardOpenOption.APPEND)
     catch { case _: Throwable => () }
     if (exceeded)
-      // "gate-failure" (r15, ADVICE r14 #4): the r14-late trigger widened
-      // to ANY hard-gate failure, including all-clean-canary windows — the
-      // log text now matches its own trigger.
-      System.err.println(f"BENCH BUDGET FAILURE: total $total%.1f s exceeds the $hardTotal%.0f s gate (canary $canary%.2f s)" +
-        recapture.map { c =>
-          f"; gate-failure auto re-capture read ${c.pass.total}%.1f s " +
-            f"(window_degraded=${c.pass.windowDegradedJson}, " +
-            f"preflight_waited=${c.preflight.waitedSec}%.0f s)" }.getOrElse(""))
+      System.err.println(f"BENCH BUDGET FAILURE: total $total%.1f s exceeds the $hardTotal%.0f s gate (canary ${pass.post}%.2f s)" +
+        recapture.map { p =>
+          f"; gate-failure auto re-capture read ${p.total}%.1f s " +
+            s"(window_degraded=${p.windowDegradedJson})" }.getOrElse(""))
     else if (total > softTotal)
-      System.err.println(f"BENCH BUDGET WARNING: total $total%.1f s exceeds the $softTotal%.0f s soft budget (gate $hardTotal%.0f s, canary $canary%.2f s)")
-    // Session-end release of the library's long-lived caches (r07, ADVICE
-    // r06 #1): the cross-query reuse (the graph family shares one edge
-    // cache) is deliberate DURING the run; the bound is this hook.
+      System.err.println(f"BENCH BUDGET WARNING: total $total%.1f s exceeds the $softTotal%.0f s soft budget (gate $hardTotal%.0f s, canary ${pass.post}%.2f s)")
+    // Cross-query cache reuse is deliberate DURING the run; this is its bound.
     graft.engine.CacheReaper.release()
-    // THE driver-contract line — compact (ms precision, no diagnostic
-    // blobs), scalars after the queries map, printed as the FINAL stdout
-    // line of the run (after every stderr warning, so a merged-stream
-    // capture also ends with it) so both a full-stdout parse and a
-    // tail-kept artifact can read it (r18, VERDICT r17 #1; pairs with
-    // build.sbt's `run / outputStrategy := StdoutOutput`, which removes
-    // the sbt `[info] ` prefix that made every prior round's stdout line
-    // unparseable as bare JSON).
-    println(Bench.contractLine(total, cpus, cpuDivergent, xmxReqGb,
-      heapDivergent, results, warmupFailed.toSeq, overBudgetKeys,
-      exceeded, pass.windowDegradedJson, Bench.warmupQueries.size,
-      recapture.map(_.pass.total), sfDir))
+    // THE contract line: the FINAL stdout line, after every stderr
+    // warning, so a merged-stream capture also ends with it (build.sbt's
+    // `run / outputStrategy := StdoutOutput` keeps it free of sbt's
+    // `[info] ` prefix).
+    println(contractLine(total, cpus, cpuDivergent, xmxReqGb,
+      heapDivergent, pass.results, warmupFailed.toSeq, overBudgetKeys,
+      exceeded, pass.windowDegradedJson, warmupQueries.size,
+      recapture.map(_.total), sfDir))
     spark.stop()
   }
 }

@@ -198,7 +198,7 @@ object Tables {
     * same resolved plan is safe; invalidation mirrors the schema cache
     * (a regenerated file re-keys), and the session sits in the key so a
     * test session never sees another session's relation. Cleared by
-    * [[clearSchemaCache]] so Bench's library-cold retimes stay honest. */
+    * [[clearSchemaCache]], which starts a library-cold pass. */
   private val relationCache =
     new java.util.concurrent.ConcurrentHashMap[
       (SparkSession, String, Long, Long, Long), DataFrame]()
@@ -393,6 +393,21 @@ object Tables {
     }
     crc.getValue
   } catch { case _: Throwable => 0L }
+
+  /** Key of a cross-run `graft_*` cache built from `tables` of `sfDir`
+    * (q52's bucketed copies, q121's stored aggregate): the sf dir name
+    * plus each table file's RAW length and mtime, so regenerated testdata
+    * re-keys and two sf dirs never share a cache. A hash of the same
+    * values could collide and serve stale state. Sanitized to
+    * `[A-Za-z0-9_]`, so `graft_<kind>_<key>` is a valid SQL identifier. */
+  private[graft] def inputCacheKey(sfDir: String, tables: String*): String = {
+    val sigs = tables.map { t =>
+      val f = new java.io.File(s"$sfDir/$t.parquet")
+      s"${f.length}_${f.lastModified}"
+    }
+    (new java.io.File(sfDir).getName +: sigs).mkString("_")
+      .replaceAll("[^A-Za-z0-9_]", "_")
+  }
 
   private def physicalSchema(spark: SparkSession, path: String): StructType = {
     val f = new java.io.File(path)

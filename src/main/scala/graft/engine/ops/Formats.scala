@@ -149,13 +149,9 @@ object Formats {
     // a fresh session re-registers the existing files with CLUSTERED BY
     // DDL instead of rewriting them, so only the first-ever invocation
     // pays the write.
-    // cache key covers the INPUT DATA (size + mtime), not just the path:
-    // regenerated testdata must never be served stale bucketed copies
-    def sig(name: String): String = {
-      val f = new java.io.File(s"$dir/$name.parquet")
-      s"${f.length}_${f.lastModified}"
-    }
-    val key = math.abs((dir + sig("orders") + sig("lineitem")).hashCode)
+    // The key covers the INPUT DATA (size + mtime), not just the path:
+    // regenerated testdata must never be served stale bucketed copies.
+    val key = Tables.inputCacheKey(dir, "orders", "lineitem")
     // cacheRoot, not java.io.tmpdir: the per-PID run dir (FastScratch r05)
     // would defeat the cross-run amortization these copies exist for
     val wh = s"${graft.engine.FastScratch.cacheRoot}/graft_buckets_$key"

@@ -11,7 +11,7 @@ import graft.engine.{QueryDef, Tables}
  * Streaming surface (SURVEY §2.8). The events table is the stream; q39–q41
  * are the batch twins of tumbling/sliding/session windows (oracle-carried),
  * q42 runs TRUE Structured Streaming (file source → watermark → windowed
- * agg → memory sink, Trigger.AvailableNow) and returns the finalized result.
+ * agg → parquet sink, Trigger.AvailableNow) and returns the finalized result.
  *
  * On a cluster the same code runs continuously against arriving files; the
  * state store partitions by group key, so scale-out is the shuffle
@@ -19,35 +19,44 @@ import graft.engine.{QueryDef, Tables}
  */
 object StreamingOps {
 
-  /** Run a streaming query with a right-sized state-partition count.
-    *
+  /** State-store/shuffle partition count of every streaming query here.
     * A stateful query's state partitioning = `spark.sql.shuffle.partitions`
-    * at FIRST batch (then pinned in the checkpoint). Every micro-batch
-    * commits every state store partition (the interval join keeps 4 stores
-    * per partition), so an oversized count is pure fixed overhead per batch
-    * — and an undersized one caps parallelism at scale. It is therefore a
-    * deliberate knob, not an inherited batch setting: sized here for the
-    * local bench volume; a 100 TB deployment sets it to O(executor cores)
-    * once at checkpoint creation. r06 re-measurement (StreamProbe, q85
-    * shape at sf0.1, warm): 8 parts 2.7 s, 4 parts 1.9 s, 2 parts 1.8 s
-    * — 4 takes the 2× win without flooring local parallelism. */
-  /** Run `body` with the state-store/shuffle partition count sized to the
-    * STATE volume, not the corpus (the CC shufflePartitions principle —
-    * empty state-store tasks cost scheduling and commit overhead per
-    * micro-batch). Retuned by StreamProbe measurement each time the data
-    * or host shifts: 8→4 in r06, 4→2 in r07 (per-query wall 2.2→2.0 s on
-    * the q85 shape; state at sf0.1 is a few thousand rows). At 100 TB
-    * state volume this knob goes UP with the state, like any shuffle. */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
+    * at its FIRST batch (then pinned in the checkpoint), and every
+    * micro-batch commits every state-store partition (the interval join
+    * keeps 4 stores per partition), so empty partitions are pure fixed
+    * overhead per batch. Sized to the STATE volume, not the corpus: state
+    * at sf0.1 is a few thousand rows, and on the q85 shape 8 partitions
+    * took 2.7 s, 4 took 1.9 s and 2 took 1.8 s. At 100 TB this goes UP
+    * with the state, like any shuffle, set once at checkpoint creation. */
+  private val statePartitions = 2
+
+  private def withStatePartitions[T](s: SparkSession)(body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    // Conf override (r18): the deliberate deployment knob made visible as
-    // a session conf so probe tools can A/B it without editing builders —
-    // a 100 TB checkpoint sets it to O(executor cores) at creation; the
-    // local default stays the StreamProbe-measured optimum passed in.
-    val eff = s.conf.getOption("spark.graft.stream.statePartitions")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(n)
-    s.conf.set("spark.sql.shuffle.partitions", eff.toString)
+    s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** Drain `stream` with Trigger.AvailableNow into a foreachBatch parquet
+    * sink under a fresh `<sink>_sink` temp dir and return the sink read
+    * back. Every batch appends unconditionally: inside foreachBatch each
+    * action re-runs the micro-batch plan (state reads included), so an
+    * `isEmpty` guard would make the emitting batch pay its state flush
+    * twice. An empty append costs one empty part file and guarantees the
+    * sink dir exists even when nothing is emitted. */
+  private def drainToParquet(s: SparkSession, stream: DataFrame, sink: String,
+      outputMode: String): DataFrame = {
+    val target = java.nio.file.Files.createTempDirectory(s"${sink}_sink").toString
+    withStatePartitions(s) {
+      stream.writeStream
+        .outputMode(outputMode)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.write.mode("append").parquet(s"$target/out")
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+    s.read.parquet(s"$target/out")
   }
 
   // --- q39: tumbling 1 h window counts ------------------------------------
@@ -158,25 +167,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("wstart"), col("event_type"), col("n"))
-    val target = java.nio.file.Files.createTempDirectory("q42_sink").toString
-    withStatePartitions(s, 2) {
-      val query = stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out").orderBy("wstart", "event_type")
+    drainToParquet(s, stream, "q42", "append").orderBy("wstart", "event_type")
   }
 
   // --- q53: custom streaming state via flatMapGroupsWithState -------------
@@ -210,26 +201,7 @@ object StreamingOps {
     // foreachBatch parquet sink (not memory): update-mode emissions append
     // per batch — at 100 TB the driver never materializes the result; here
     // the single static batch yields exactly one row per user.
-    val target = java.nio.file.Files.createTempDirectory("q53_sink").toString
-    withStatePartitions(s, 2) {
-      val query = perUser.toDF("user_id", "n_events", "last_us")
-        .writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out")
+    drainToParquet(s, perUser.toDF("user_id", "n_events", "last_us"), "q53", "update")
       .select(col("user_id"), col("n_events"),
         timestamp_micros(col("last_us")).as("last_ts"))
       .orderBy("user_id")
@@ -262,25 +234,8 @@ object StreamingOps {
         && col("v_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR")
         && col("v_ts") < col("p_ts"))
       .select(col("p_event_id").as("purchase_id"), col("v_event_id").as("view_id"))
-    val target = java.nio.file.Files.createTempDirectory("q56_sink").toString
-    withStatePartitions(s, 2) {
-      val query = joined.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out").orderBy("purchase_id", "view_id").limit(500)
+    drainToParquet(s, joined, "q56", "append")
+      .orderBy("purchase_id", "view_id").limit(500)
   }
 
   // --- q61: foreachBatch sink --------------------------------------------
@@ -304,7 +259,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("wstart"), col("event_type"), col("n"))
-    withStatePartitions(s, 2) {
+    withStatePartitions(s) {
       val query = agg.writeStream
         .outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -348,7 +303,7 @@ object StreamingOps {
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"), min(col("profile_n")).as("profile_n"))
     val target = java.nio.file.Files.createTempDirectory("q73_sink").toString + "/out"
-    withStatePartitions(s, 2) {
+    withStatePartitions(s) {
       val query = enriched.writeStream
         .outputMode("update")
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -412,25 +367,8 @@ object StreamingOps {
       "leftOuter")
       .select(col("p_event_id").as("purchase_id"),
         coalesce(col("v_event_id"), lit(-1L)).as("view_id"))
-    val target = java.nio.file.Files.createTempDirectory("q93_sink").toString
-    withStatePartitions(s, 2) {
-      val query = joined.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out").orderBy("purchase_id", "view_id").limit(500)
+    drainToParquet(s, joined, "q93", "append")
+      .orderBy("purchase_id", "view_id").limit(500)
   }
 
   // --- q82: time-series resample to an hourly grid + forward fill ---------
@@ -508,25 +446,7 @@ object StreamingOps {
       .agg(count(lit(1)).as("n_events"))
       .select(col("session_window.start").as("session_start"),
         col("user_id"), col("n_events"))
-    val target = java.nio.file.Files.createTempDirectory("q85_sink").toString
-    withStatePartitions(s, 2) {
-      val query = sessions.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out").orderBy("user_id", "session_start")
+    drainToParquet(s, sessions, "q85", "append").orderBy("user_id", "session_start")
   }
 
   // --- q94: per-event session-relative features ---------------------------
@@ -656,26 +576,8 @@ object StreamingOps {
             Iterator((minId, fp, n))
           }
       }
-    val target = java.nio.file.Files.createTempDirectory("q104_sink").toString
-    withStatePartitions(s, 2) {
-      val query = deduped.toDF("doc_id", "fingerprint", "n_claims")
-        .writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out").orderBy("doc_id").limit(500)
+    drainToParquet(s, deduped.toDF("doc_id", "fingerprint", "n_claims"), "q104", "update")
+      .orderBy("doc_id").limit(500)
   }
 
   // --- q105: TRUE streaming sliding windows (1 h window, 30 min slide) ----
@@ -701,25 +603,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("wstart"), col("event_type"), col("n"))
-    val target = java.nio.file.Files.createTempDirectory("q105_sink").toString
-    withStatePartitions(s, 2) {
-      val query = windows.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out").orderBy("wstart", "event_type")
+    drainToParquet(s, windows, "q105", "append").orderBy("wstart", "event_type")
   }
 
   def defs: Seq[QueryDef] =

@@ -294,13 +294,8 @@ object WarehouseOps {
     // bucketed copies, the stored aggregate IS pre-existing state in the
     // scenario being modeled, so it lives at a deterministic per-input
     // path and only the first-ever invocation pays the history
-    // aggregation. The key embeds the RAW size/mtime values plus the sf
-    // name (r05, ADVICE r04: a truncated 32-bit hashCode could collide
-    // after testdata regeneration and silently serve a stale aggregate —
-    // the raw values cannot).
-    val f = new java.io.File(s"$dir/orders.parquet")
-    val sfName = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-    val key = s"${sfName}_${f.length}_${f.lastModified}"
+    // aggregation (see Tables.inputCacheKey).
+    val key = Tables.inputCacheKey(dir, "orders")
     val stored = s"${graft.engine.FastScratch.cacheRoot}/graft_matview_$key"
     if (!new java.io.File(s"$stored/_SUCCESS").exists())
       aggOf(orders.where(col("o_orderkey") % 10 =!= 7))

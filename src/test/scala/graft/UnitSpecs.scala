@@ -199,63 +199,6 @@ class BenchWindowSpec extends AnyFunSuite {
   }
 }
 
-/** Start-restart policy (r15, VERDICT r14 #3): the preflight probe is a
-  * point sample, and ROUND14 banked the race (probe clean, pre-canary
-  * degraded seconds later). restartNeeded fires ONLY when a verified-clean
-  * preflight is contradicted by a degraded shuffle pre-canary. */
-class BenchRestartSpec extends AnyFunSuite {
-  test("verified-clean preflight + degraded pre-canary restarts") {
-    assert(Bench.restartNeeded(Some(false), 0.486))
-  }
-  test("clean pre-canary never restarts") {
-    assert(!Bench.restartNeeded(Some(false), 0.34))
-    assert(!Bench.restartNeeded(Some(false), Bench.canarySuspectLine))
-  }
-  test("degraded-start preflight never restarts (budget-exhausted start is policy)") {
-    assert(!Bench.restartNeeded(Some(true), 0.95))
-  }
-  test("unknown preflight classification never restarts (no evidence to contradict)") {
-    assert(!Bench.restartNeeded(None, 0.95))
-  }
-  test("a FAILED pre-canary (-1) is not degraded evidence") {
-    assert(!Bench.restartNeeded(Some(false), -1.0))
-  }
-}
-
-/** Truncation-proof headline (r15, VERDICT r14 #1): the summary line
-  * prints AFTER the JSON so the driver's tail-kept artifact always carries
-  * total / budget_exceeded / window class / preflight wait even when the
-  * one-line JSON head-truncates to `parsed: null`. */
-class BenchSummarySpec extends AnyFunSuite {
-  test("summary line carries the verdict-critical numbers") {
-    val s = Bench.summaryLine(84.57, budgetExceeded = false, "false",
-      30.0, restarted = false, None)
-    assert(s === "BENCH SUMMARY: total=84.57s budget_exceeded=false " +
-      "window_degraded=false preflight_waited=30s restarted=false")
-  }
-  test("gate failure with recapture appends the recapture total") {
-    val s = Bench.summaryLine(93.95, budgetExceeded = true, "true",
-      0.0, restarted = true, Some(72.56))
-    assert(s === "BENCH SUMMARY: total=93.95s budget_exceeded=true " +
-      "window_degraded=true preflight_waited=0s restarted=true " +
-      "recapture_total=72.56s")
-  }
-  test("null window classification survives into the summary") {
-    val s = Bench.summaryLine(80.0, budgetExceeded = false, "null",
-      0.0, restarted = false, None)
-    assert(s.contains("window_degraded=null"))
-  }
-  test("cpus divergence is flagged in the summary, and only when it fires") {
-    val clean = Bench.summaryLine(80.0, budgetExceeded = false, "false",
-      0.0, restarted = false, None)
-    assert(!clean.contains("cpus_divergent"),
-      "the common clean line must stay byte-identical to the r15 format")
-    val div = Bench.summaryLine(80.0, budgetExceeded = false, "false",
-      0.0, restarted = false, None, cpusDivergent = true)
-    assert(div.endsWith(" cpus_divergent=true"))
-  }
-}
-
 /** Layout-rewrite width (r18, VERDICT r17 #7 + ADVICE r17): partition
   * count from summed input file bytes × measured projection ratio, floored
   * at the legacy local width and clamped BEFORE the Long→Int narrowing —
@@ -346,151 +289,6 @@ class BenchCpusSpec extends AnyFunSuite {
   test("an unparseable mode is divergent, not silently clean") {
     assert(Bench.cpusDivergent(""))
     assert(Bench.cpusDivergent("all"))
-  }
-}
-
-/** Pre-flight wait policy (r14, VERDICT r13 #1): pure pins on
-  * Bench.preflightWait with injected probe + sleep — no host, no clock.
-  * The policy changes WHEN a gate capture starts, never WHAT it measures,
-  * and every probe it takes must appear in the record. */
-class BenchPreflightSpec extends AnyFunSuite {
-  private def scripted(values: Double*): (() => Double, () => Int) = {
-    val it = values.iterator
-    var calls = 0
-    (() => { calls += 1; it.next() }, () => calls)
-  }
-
-  test("clean first probe starts immediately: one probe, zero wait") {
-    val (probe, calls) = scripted(0.33)
-    val pf = Bench.preflightWait(probe, _ => fail("must not sleep"))
-    assert(pf === Bench.Preflight(List(0.33), 0.0, startedDegraded = Some(false)))
-    assert(calls() === 1)
-  }
-
-  test("degraded probes wait step-by-step and start at the first clean dip") {
-    val slept = scala.collection.mutable.ListBuffer[Double]()
-    val (probe, _) = scripted(0.52, 0.47, 0.61, 0.34)
-    val pf = Bench.preflightWait(probe, slept += _, stepSec = 30.0, maxWaitSec = 600.0)
-    assert(pf.probes === List(0.52, 0.47, 0.61, 0.34))
-    assert(pf.waitedSec === 90.0)
-    assert(slept.toList === List(30.0, 30.0, 30.0))
-    assert(pf.startedDegraded === Some(false))
-  }
-
-  test("wait budget exhausted: starts anyway, flagged started_degraded") {
-    val (probe, calls) = scripted(Seq.fill(30)(0.55): _*)
-    val pf = Bench.preflightWait(probe, _ => (), stepSec = 30.0, maxWaitSec = 600.0)
-    // 600/30 = 20 sleeps max -> 21 probes, never more
-    assert(calls() === 21)
-    assert(pf.probes.size === 21)
-    assert(pf.waitedSec === 600.0)
-    assert(pf.startedDegraded === Some(true))
-  }
-
-  test("a failed probe (-1) stops the wait: classification unknown, not clean") {
-    // r15 (ADVICE r14 #3): the earlier probe read DEGRADED, then the probe
-    // failed — recording started_degraded=false there misreported an
-    // unknown state as 'not degraded'. Tri-state: the field is None
-    // (JSON null) whenever the last probe carried no evidence.
-    val (probe, calls) = scripted(0.55, -1.0, 0.99)
-    val pf = Bench.preflightWait(probe, _ => ())
-    assert(calls() === 2, "must not keep probing after a canary failure")
-    assert(pf.probes === List(0.55, -1.0))
-    assert(pf.startedDegraded === None,
-      "a failed probe must classify the start as UNKNOWN, neither clean nor degraded")
-  }
-
-  test("probe exactly at the suspect line is clean (consistent with degraded())") {
-    val (probe, _) = scripted(Bench.canarySuspectLine)
-    val pf = Bench.preflightWait(probe, _ => fail("must not sleep"))
-    assert(pf.startedDegraded === Some(false) && pf.waitedSec === 0.0)
-  }
-
-  test("preflight JSON carries probes, wait, and start classification") {
-    val j = Bench.Preflight(List(0.52, 0.34), 30.0, startedDegraded = Some(false)).json
-    assert(j === """{"probes":[0.52,0.34],"waited_sec":30.0,"started_degraded":false}""")
-    val n = Bench.Preflight(List(0.55, -1.0), 30.0, startedDegraded = None).json
-    assert(n === """{"probes":[0.55,-1.0],"waited_sec":30.0,"started_degraded":null}""")
-  }
-
-  // r16 confirm-probe mode (confirmGapSec > 0): a clean probe is a POINT
-  // sample inside a possible episode train — it must be confirmed by a
-  // second clean probe one gap later before the capture starts. Every
-  // legacy pin above runs with the default gap of 0 and stays unchanged.
-  test("confirm mode: a clean probe starts only after a clean confirm probe") {
-    val slept = scala.collection.mutable.ListBuffer[Double]()
-    val (probe, calls) = scripted(0.33, 0.35)
-    val pf = Bench.preflightWait(probe, slept += _, confirmGapSec = 15.0)
-    assert(pf === Bench.Preflight(List(0.33, 0.35), 15.0, startedDegraded = Some(false)))
-    assert(calls() === 2 && slept.toList === List(15.0))
-  }
-  test("confirm mode: a degraded confirm probe re-enters the wait loop") {
-    // clean 0.33 → confirm reads 0.52 (the episode train caught) → wait →
-    // clean 0.30 → confirm 0.31 clean → start. The single-probe green that
-    // started the r15 official capture can no longer start one.
-    val slept = scala.collection.mutable.ListBuffer[Double]()
-    val (probe, _) = scripted(0.33, 0.52, 0.30, 0.31)
-    val pf = Bench.preflightWait(probe, slept += _,
-      stepSec = 30.0, maxWaitSec = 600.0, confirmGapSec = 15.0)
-    assert(pf.probes === List(0.33, 0.52, 0.30, 0.31))
-    assert(slept.toList === List(15.0, 30.0, 15.0) && pf.waitedSec === 60.0)
-    assert(pf.startedDegraded === Some(false))
-  }
-  test("confirm mode: no budget left to confirm starts on the single clean probe") {
-    val (probe, calls) = scripted(0.33)
-    val pf = Bench.preflightWait(probe, _ => fail("must not sleep"),
-      stepSec = 30.0, maxWaitSec = 10.0, confirmGapSec = 15.0)
-    assert(calls() === 1 && pf.waitedSec === 0.0)
-    assert(pf.startedDegraded === Some(false))
-  }
-  test("confirm mode: a failed confirm probe classifies the start as unknown") {
-    val (probe, calls) = scripted(0.33, -1.0)
-    val pf = Bench.preflightWait(probe, _ => (), confirmGapSec = 15.0)
-    assert(calls() === 2 && pf.probes === List(0.33, -1.0))
-    assert(pf.startedDegraded === None)
-  }
-  test("confirm mode: budget exhaustion while degraded still starts flagged degraded") {
-    val (probe, calls) = scripted(Seq.fill(30)(0.55): _*)
-    val pf = Bench.preflightWait(probe, _ => (),
-      stepSec = 30.0, maxWaitSec = 600.0, confirmGapSec = 15.0)
-    assert(calls() === 21 && pf.waitedSec === 600.0)
-    assert(pf.startedDegraded === Some(true))
-  }
-}
-
-/** Wakeup-latency sampler pins (r16): the histogram/quantile/JSON math is
-  * pure and pinned without threads. The sampler converts SCALING.md
-  * §variance's by-hand sleep-overshoot adjudication into an in-artifact
-  * measurement; the window classifier stays canary-based. */
-class BenchWakeupSpec extends AnyFunSuite {
-  test("bucket edges: clean floor, millisecond class, and overflow land apart") {
-    assert(Bench.wakeupBucket(0.0) === 0)
-    assert(Bench.wakeupBucket(0.2) === 0, "upper bounds are inclusive")
-    assert(Bench.wakeupBucket(0.21) === 1)
-    assert(Bench.wakeupBucket(1.0) === 2)
-    assert(Bench.wakeupBucket(3.5) === 4)
-    assert(Bench.wakeupBucket(9.9) === 5)
-    assert(Bench.wakeupBucket(100.0) === Bench.wakeupBoundsMs.length, "overflow bucket")
-  }
-  test("quantiles are conservative bucket upper bounds; overflow reports the max") {
-    // 98 clean samples, one in (1,2], one in the overflow bucket.
-    val counts = Array[Long](98, 0, 0, 1, 0, 0, 0, 1)
-    assert(Bench.wakeupQuantileMs(counts, 0.50, 102.1) === 0.2)
-    assert(Bench.wakeupQuantileMs(counts, 0.99, 102.1) === 2.0)
-    assert(Bench.wakeupQuantileMs(counts, 1.00, 102.1) === 102.1)
-    assert(Bench.wakeupQuantileMs(Array.fill(8)(0L), 0.5, 0.0) === -1.0,
-      "no samples must read -1, never a fake clean 0")
-  }
-  test("JSON carries sample count, conservative p50/p99, max, and the over-1ms count") {
-    val counts = Array[Long](98, 0, 0, 1, 0, 0, 0, 1)
-    assert(Bench.wakeupJson(counts, 102.125) ===
-      """{"samples":100,"p50_ms":0.200,"p99_ms":2.000,"max_ms":102.125,"over_1ms":2}""")
-    assert(Bench.wakeupJson(Array.fill(8)(0L), 0.0) === """{"samples":0}""")
-  }
-  test("over_1ms counts only buckets entirely past the millisecond line") {
-    // bucket 2 covers (0.5, 1.0] — at or under 1 ms, must NOT count.
-    val counts = Array[Long](0, 0, 5, 3, 0, 0, 0, 0)
-    assert(Bench.wakeupJson(counts, 1.9).contains(""""over_1ms":3"""))
   }
 }
 
@@ -644,5 +442,57 @@ class ListingTokenSpec extends AnyFunSuite {
       "could not move the fixture mtime")
     assert(graft.engine.Tables.listingToken(d.toFile) !== t0,
       "a non-sampled file's metadata change left the listing token unchanged")
+  }
+}
+
+/** Cross-run cache key pins: q52's bucketed copies and q121's stored
+  * aggregate live at `graft_<kind>_<key>` paths (q52's key is also a
+  * database name), so the key must be a valid SQL identifier suffix and
+  * must re-key whenever an input table's bytes or mtime change or the
+  * sf dir differs. */
+class InputCacheKeySpec extends AnyFunSuite {
+  import java.nio.file.{Files, Path}
+  import graft.engine.Tables.inputCacheKey
+
+  /** `<tmp>/<sfName>` holding orders + lineitem files with a fixed mtime. */
+  private def sfDir(sfName: String): Path = {
+    val root = Files.createTempDirectory("input-cache-key-spec")
+    root.toFile.deleteOnExit()
+    val d = Files.createDirectory(root.resolve(sfName))
+    Seq("orders", "lineitem").foreach { t =>
+      val f = d.resolve(s"$t.parquet")
+      Files.write(f, s"$t-bytes".getBytes("US-ASCII"))
+      assert(f.toFile.setLastModified(1700000000000L))
+    }
+    d
+  }
+
+  test("the key is a valid SQL identifier suffix") {
+    val key = inputCacheKey(sfDir("sf0.001").toString, "orders", "lineitem")
+    assert(key.matches("[A-Za-z0-9_]+"), key)
+    assert(key.startsWith("sf0_001_"), key)
+    val db = s"graft_buckets_$key"
+    assert(org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+      .parseMultipartIdentifier(db) === Seq(db))
+  }
+
+  test("the key changes when one table's bytes or mtime change") {
+    val d = sfDir("sf0.01")
+    val k0 = inputCacheKey(d.toString, "orders", "lineitem")
+    assert(inputCacheKey(d.toString, "orders", "lineitem") === k0)
+    val li = d.resolve("lineitem.parquet").toFile
+    assert(li.setLastModified(1700000001000L))
+    val k1 = inputCacheKey(d.toString, "orders", "lineitem")
+    assert(k1 !== k0, "an mtime change left the key unchanged")
+    Files.write(li.toPath, "lineitem-bytes-regenerated".getBytes("US-ASCII"))
+    assert(li.setLastModified(1700000001000L))
+    assert(inputCacheKey(d.toString, "orders", "lineitem") !== k1,
+      "a size change at the same mtime left the key unchanged")
+  }
+
+  test("two sf dirs with identical files get different keys") {
+    val a = inputCacheKey(sfDir("sf0.01").toString, "orders")
+    val b = inputCacheKey(sfDir("sf0.1").toString, "orders")
+    assert(a !== b)
   }
 }
